@@ -9,7 +9,9 @@ remote RDBMS entirely.
 Layout
 ------
 - ``session``    : tuned SparkSession factory (AQE, UTC, Arrow).
-- ``catalog``    : table registration + typed schema snapshot/serialization
+- ``catalog``    : the one parquet read path (fingerprint-checked schema
+                   handle), table registration + typed schema snapshot/
+                   serialization
                    (supersedes the reference's names-only introspection,
                    db_utils.py:119-153).
 - ``engine``     : the query lifecycle — sanitize -> validate read-only ->
@@ -20,7 +22,8 @@ Layout
 - ``operators``  : the query surface (SURVEY.md §2B) + LLM-data-pipeline
                    extensions (dedup, similarity, text, multimodal).
 - ``streaming``  : Structured Streaming seam over the events table.
-- ``sources``    : readers/sinks (parquet/csv/json/jdbc).
+- ``sources``    : csv/json/orc/jdbc readers + sinks (parquet is read
+                   through ``catalog.read_parquet``).
 - ``functions``  : reusable column expressions (decimal-exact money math,
                    vector ops, deterministic text hashing).
 - ``plans``      : plan inspection helpers (read-only guard, explain).

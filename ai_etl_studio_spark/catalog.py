@@ -8,8 +8,19 @@ serialization mirrors the reference's ``TABLE "t" (columns: a, b)`` format
 Scale notes (100 TB): in production these registrations point at external
 catalog tables (partitioned, statistics collected) rather than loose parquet
 files; ``register_tables`` keeps the same name surface so every query in
-``operators/`` is storage-agnostic. Reads stay lazy — registering a view
-costs only a schema read of the parquet footer.
+``operators/`` is storage-agnostic.
+
+One parquet read path: ``read_parquet`` (and through it ``load_table`` and
+``register_tables``) serves every base table and build-once layout. Without
+a schema Spark infers one from a parquet footer, and that inference is a
+Spark job. A per-session schema handle removes it from every read after the
+first: it keeps, per absolute path, the SparkContext application id, the
+path's file fingerprint (relpath, inode, size, ns mtime of every data file,
+listed recursively) and the inferred schema. When the fingerprint still
+matches, the read passes the held schema to Spark; when it does not, the
+schema is inferred again and the entry replaced. This is a metadata-only
+cache: it holds one schema per path and never data, and every read still
+builds a fresh relation, so file listing and data are read fresh each time.
 """
 
 from __future__ import annotations
@@ -17,6 +28,7 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import LongType, StructType
 
 #: The driver-generated test tables (TESTDATA.md); the engine works over any
 #: registered tables — this list only drives the default registration.
@@ -62,9 +74,46 @@ def epoch_long_to_ts(col: str):
     )
 
 
-def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Lazy parquet scan for one table (column pruning + predicate pushdown
-    apply automatically to whatever the caller selects/filters).
+#: The schema handle: absolute path -> (application id, fingerprint, schema).
+#: One entry per path; a new session or a changed file replaces it. Each
+#: entry is stored whole, so two racing readers at worst both infer.
+_SCHEMAS: dict[str, tuple[str, tuple, StructType]] = {}
+
+
+def _hidden(name: str) -> bool:
+    """Names Spark's file listing skips (``_SUCCESS``, ``.crc`` files,
+    ``_temporary``); ``_``-prefixed hive partitions (``_k=v``) are kept."""
+    return name.startswith(".") or (name.startswith("_") and "=" not in name)
+
+
+def _fingerprint(path: str) -> tuple:
+    """``(relpath, inode, size, st_mtime_ns)`` of every data file under
+    ``path`` (the path itself when it is a file), sorted by relpath. A
+    rewrite in place changes the inode, the size or the ns mtime."""
+    if os.path.isfile(path):
+        st = os.stat(path)
+        return (("", st.st_ino, st.st_size, st.st_mtime_ns),)
+    entries = []
+    for root, dirs, files in os.walk(path):
+        dirs[:] = [d for d in dirs if not _hidden(d)]
+        for f in files:
+            if _hidden(f):
+                continue
+            full = os.path.join(root, f)
+            st = os.stat(full)
+            rel = os.path.relpath(full, path)
+            entries.append((rel, st.st_ino, st.st_size, st.st_mtime_ns))
+    return tuple(sorted(entries))
+
+
+def read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """The catalog's one parquet read path, for base tables and build-once
+    layouts alike: a lazy scan whose schema comes from the handle.
+
+    On a hit (same session, same fingerprint) the read is
+    ``spark.read.schema(held).parquet(path)`` and runs no Spark job; on a
+    miss the schema is inferred (one job) and the entry replaced. Every
+    call returns a new relation, so two reads of one table self-join.
 
     ``events.ts`` is parquet TIMESTAMP(NANOS), which Spark's vectorized
     reader rejects (PARQUET_TYPE_ILLEGAL); it is read as nanos-since-epoch
@@ -72,18 +121,32 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     driver testdata is µs-aligned (verified: epoch_ns % 1000 == 0 for all
     rows), so the truncation is lossless vs the DuckDB oracle's native ns.
     """
-    path = os.path.join(sf_dir, f"{name}.parquet")
-    df = spark.read.parquet(path)
-    from pyspark.sql import types as T
-
-    ns_longs = [
-        f.name
-        for f in df.schema.fields
-        if f.name == "ts" and isinstance(f.dataType, T.LongType)
-    ]
-    for col in ns_longs:
-        df = df.withColumn(col, epoch_long_to_ts(col))
+    path = os.path.abspath(path)
+    app_id = spark.sparkContext.applicationId
+    fingerprint = _fingerprint(path)
+    held = _SCHEMAS.get(path)
+    if held is not None and held[:2] == (app_id, fingerprint):
+        schema = held[2]
+        df = spark.read.schema(schema).parquet(path)
+    else:
+        df = spark.read.parquet(path)
+        schema = df.schema
+        _SCHEMAS[path] = (app_id, fingerprint, schema)
+    for f in schema.fields:
+        if f.name == "ts" and isinstance(f.dataType, LongType):
+            df = df.withColumn(f.name, epoch_long_to_ts(f.name))
     return df
+
+
+def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """Lazy parquet scan of table ``name`` under ``sf_dir`` through
+    ``read_parquet``. While the table's file fingerprint (relpath, inode,
+    size, ns mtime of each data file) is unchanged, the schema comes from
+    the session's schema handle and the call runs no Spark job; after a
+    rewrite it is inferred again. File listing and data are read fresh on
+    every call (column pruning and predicate pushdown apply to whatever
+    the caller selects/filters)."""
+    return read_parquet(spark, os.path.join(sf_dir, f"{name}.parquet"))
 
 
 def spread_small_scan(spark: SparkSession, df: DataFrame) -> DataFrame:

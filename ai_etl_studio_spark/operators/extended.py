@@ -10,7 +10,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ai_etl_studio_spark.catalog import load_table
+from ai_etl_studio_spark.catalog import load_table, read_parquet
 from ai_etl_studio_spark.functions.exact import sql_dsum, dsum
 from ai_etl_studio_spark.operators import register
 from ai_etl_studio_spark.plans.snapshot import capture_stage
@@ -1279,7 +1279,7 @@ def partition_pruned_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     PartitionFilters carries o_month, PushedFilters stays empty.
     """
     path = ensure_month_partitioned_orders(spark, sf_dir)
-    df = spark.read.parquet(path).filter(F.col("o_month") == "1995-03")
+    df = read_parquet(spark, path).filter(F.col("o_month") == "1995-03")
     return (
         df.groupBy("o_orderpriority")
         .agg(
@@ -1397,7 +1397,7 @@ def zorder_boxed_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     partition_pruned_rollup exactness pattern (integer cents).
     """
     path = ensure_zorder_orders(spark, sf_dir)
-    df = spark.read.parquet(path).filter(
+    df = read_parquet(spark, path).filter(
         (F.col("o_custkey") >= 100)
         & (F.col("o_custkey") <= 199)
         & (F.col("o_orderdate") >= F.lit("1996-01-01").cast("timestamp"))
@@ -1481,9 +1481,9 @@ def dpp_quarter_star_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     Plan invariant pinned in test_plans: the fact scan's
     PartitionFilters carries dynamicpruningexpression(o_month ...).
     """
-    fact = spark.read.parquet(ensure_month_partitioned_orders(spark, sf_dir))
+    fact = read_parquet(spark, ensure_month_partitioned_orders(spark, sf_dir))
     dim = (
-        spark.read.parquet(ensure_month_dim(spark, sf_dir))
+        read_parquet(spark, ensure_month_dim(spark, sf_dir))
         .filter((F.col("m_year") == 1995) & (F.col("m_quarter") == 2))
     )
     return (

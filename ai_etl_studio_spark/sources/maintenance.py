@@ -19,6 +19,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ai_etl_studio_spark.catalog import read_parquet
+
 
 def compact_parquet(
     spark: SparkSession,
@@ -42,7 +44,7 @@ def compact_parquet(
     n_files_in = len(sizes)
     total_bytes = sum(sizes)
     n_out = max(1, math.ceil(total_bytes / (target_mb * 1024 * 1024)))
-    df = spark.read.parquet(in_dir)
+    df = read_parquet(spark, in_dir)
     df.repartition(n_out).write.mode("overwrite").parquet(out_dir)
     n_files_out = len(
         [f for f in os.listdir(out_dir) if f.startswith("part-")]

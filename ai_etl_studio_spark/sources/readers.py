@@ -1,12 +1,15 @@
-"""Readers: parquet (default), csv, json, orc, jdbc, binaryFile.
+"""Readers for the non-parquet sources: csv, json, orc, jdbc, binaryFile.
 
 The reference's only sources were live PostgreSQL/MySQL connections
 (db_utils.py:119-165). Here parquet over a data lake is the primary
-source (TESTDATA.md tables); ``read_jdbc`` keeps remote-RDBMS parity.
+source (TESTDATA.md tables), and it has one read path:
+``catalog.read_parquet``, which every base table and build-once layout
+goes through (its schema handle skips the inference job on repeat
+reads). ``read_jdbc`` keeps remote-RDBMS parity.
 
 Scale notes:
 - parquet: the only format with full pushdown + column pruning +
-  vectorized reading; everything lands here.
+  vectorized reading; everything lands there.
 - csv/json: schema ALWAYS supplied explicitly — inferSchema is a full
   extra pass over 100 TB.
 - jdbc: partitioned reads (partitionColumn/lowerBound/upperBound/
@@ -17,10 +20,6 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
-
-
-def read_parquet(spark: SparkSession, path: str) -> DataFrame:
-    return spark.read.parquet(path)
 
 
 def read_csv(spark: SparkSession, path: str, schema: StructType | str) -> DataFrame:

@@ -114,6 +114,39 @@ def test_round_seal_equals_latest():
         )
 
 
+def test_seal_paths_write_both_or_neither(tmp_path):
+    """bench.seal_paths decides, before anything is written, where a run
+    goes: a full run writes the round seal and ``latest`` together, or,
+    when either holds a higher bench_n, only the scratch file, so the
+    r13 divergence (an N=1 run creating the round seal while its
+    ``latest`` write was diverted) cannot recur. No Spark needed."""
+    import json
+
+    import bench
+
+    seal = tmp_path / "BENCH_full_r13.json"
+    latest = tmp_path / "BENCH_full_latest.json"
+    scratch = tmp_path / "BENCH_full_scratch.json"
+
+    def paths(bench_n, only=False):
+        return bench.seal_paths(str(tmp_path), 13, bench_n, only)
+
+    # fresh checkout: a full run creates both; a merge creates neither
+    assert paths(1) == [str(seal), str(latest)]
+    assert paths(1, only=True) == []
+    # N=3 latest, no round seal: an N=1 run is diverted whole
+    latest.write_text(json.dumps({"bench_n": 3}))
+    assert paths(1) == [str(scratch)]
+    assert paths(3) == [str(seal), str(latest)]
+    # a merge updates only what exists, never creating the seal
+    assert paths(1, only=True) == [str(latest)]
+    # the higher N may sit in either file
+    seal.write_text(json.dumps({"bench_n": 5}))
+    assert paths(3) == [str(scratch)]
+    assert paths(5) == [str(seal), str(latest)]
+    assert paths(1, only=True) == [str(seal), str(latest)]
+
+
 def test_correctness_full_artifact_is_fresh():
     """The committed full-registry correctness artifact must cover the
     registry EXACTLY (r6 ADVICE: the r6 artifact was generated before 7
