@@ -14,6 +14,9 @@ Layout
                    serialization
                    (supersedes the reference's names-only introspection,
                    db_utils.py:119-153).
+- ``freshness``  : the one "has this source changed?" rule — the file
+                   fingerprint and the session memo keyed on it.
+- ``layout_cache``: build-once layout identity, manifests, stale sweep.
 - ``engine``     : the query lifecycle — sanitize -> validate read-only ->
                    spark.sql -> limit bound -> duplicate-name rename
                    (reference pipeline app.py:242-302 / db_utils.py:158-182).

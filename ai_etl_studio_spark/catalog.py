@@ -15,12 +15,15 @@ One parquet read path: ``read_parquet`` (and through it ``load_table`` and
 a schema Spark infers one from a parquet footer, and that inference is a
 Spark job. A per-session schema handle removes it from every read after the
 first: it keeps, per absolute path, the SparkContext application id, the
-path's file fingerprint (relpath, inode, size, ns mtime of every data file,
-listed recursively) and the inferred schema. When the fingerprint still
-matches, the read passes the held schema to Spark; when it does not, the
-schema is inferred again and the entry replaced. This is a metadata-only
-cache: it holds one schema per path and never data, and every read still
-builds a fresh relation, so file listing and data are read fresh each time.
+path's file fingerprint and the inferred schema. The fingerprint is
+``freshness.fingerprint`` (relpath, inode, size, ns mtime of every data
+file, listed recursively), the one freshness rule every layout, statistics
+table and copurchase memo is keyed by, and the handle is a
+``freshness.SessionMemo``. When the fingerprint still matches, the read
+passes the held schema to Spark; when it does not, the schema is inferred
+again and the entry replaced. This is a metadata-only cache: it holds one
+schema per path and never data, and every read still builds a fresh
+relation, so file listing and data are read fresh each time.
 """
 
 from __future__ import annotations
@@ -28,7 +31,9 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql.types import LongType, StructType
+from pyspark.sql.types import LongType
+
+from ai_etl_studio_spark.freshness import SessionMemo
 
 #: The driver-generated test tables (TESTDATA.md); the engine works over any
 #: registered tables — this list only drives the default registration.
@@ -74,36 +79,9 @@ def epoch_long_to_ts(col: str):
     )
 
 
-#: The schema handle: absolute path -> (application id, fingerprint, schema).
-#: One entry per path; a new session or a changed file replaces it. Each
-#: entry is stored whole, so two racing readers at worst both infer.
-_SCHEMAS: dict[str, tuple[str, tuple, StructType]] = {}
-
-
-def _hidden(name: str) -> bool:
-    """Names Spark's file listing skips (``_SUCCESS``, ``.crc`` files,
-    ``_temporary``); ``_``-prefixed hive partitions (``_k=v``) are kept."""
-    return name.startswith(".") or (name.startswith("_") and "=" not in name)
-
-
-def _fingerprint(path: str) -> tuple:
-    """``(relpath, inode, size, st_mtime_ns)`` of every data file under
-    ``path`` (the path itself when it is a file), sorted by relpath. A
-    rewrite in place changes the inode, the size or the ns mtime."""
-    if os.path.isfile(path):
-        st = os.stat(path)
-        return (("", st.st_ino, st.st_size, st.st_mtime_ns),)
-    entries = []
-    for root, dirs, files in os.walk(path):
-        dirs[:] = [d for d in dirs if not _hidden(d)]
-        for f in files:
-            if _hidden(f):
-                continue
-            full = os.path.join(root, f)
-            st = os.stat(full)
-            rel = os.path.relpath(full, path)
-            entries.append((rel, st.st_ino, st.st_size, st.st_mtime_ns))
-    return tuple(sorted(entries))
+#: The schema handle: absolute path -> the schema inferred from it, held
+#: for one session while the path's file fingerprint is unchanged.
+_SCHEMAS = SessionMemo()
 
 
 def read_parquet(spark: SparkSession, path: str) -> DataFrame:
@@ -122,16 +100,10 @@ def read_parquet(spark: SparkSession, path: str) -> DataFrame:
     rows), so the truncation is lossless vs the DuckDB oracle's native ns.
     """
     path = os.path.abspath(path)
-    app_id = spark.sparkContext.applicationId
-    fingerprint = _fingerprint(path)
-    held = _SCHEMAS.get(path)
-    if held is not None and held[:2] == (app_id, fingerprint):
-        schema = held[2]
-        df = spark.read.schema(schema).parquet(path)
-    else:
-        df = spark.read.parquet(path)
-        schema = df.schema
-        _SCHEMAS[path] = (app_id, fingerprint, schema)
+    schema = _SCHEMAS.fetch(
+        spark, path, [path], lambda: spark.read.parquet(path).schema
+    )
+    df = spark.read.schema(schema).parquet(path)
     for f in schema.fields:
         if f.name == "ts" and isinstance(f.dataType, LongType):
             df = df.withColumn(f.name, epoch_long_to_ts(f.name))

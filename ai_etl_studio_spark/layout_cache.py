@@ -1,26 +1,32 @@
-"""Fingerprinted-layout cache hygiene (r8 verdict item 6; manifest
-placement fixed per the r9 ADVICE).
+"""Build-once layouts: one identity call and one build-or-re-attach step.
 
 Every build-once artifact — bucketed tables, hive month partitions,
 Z-ORDER files, PageRank edge buckets, boilerplate/substring line
-indexes, PQ codes — lives under ``.cache/<kind>/<fingerprint>`` where
-the fingerprint hashes the source file's (size, mtime). A regenerated
-corpus therefore gets a fresh directory, which is correct but strands
-the old fingerprint forever: nothing ever maps it back to a source to
-notice the source changed.
+indexes, PQ codes, CBO statistics tables — takes its name and directory
+from ``layout_ident``: ``<kind>_<digest>`` under ``.cache/<kind>`` (or a
+caller's ``base_dir``). The digest hashes the file fingerprint
+(``freshness.fingerprint``: relpath, inode, size, ns mtime of every data
+file) of each source table, the builder's params and the base
+directory. A rewritten source therefore gets a fresh directory, even
+when the rewrite keeps the size and lands inside the same second or
+only touches one part file of a Spark-written directory, and the same
+corpus built into two locations gets two catalog names. ``build_once``
+then writes the layout unless a completed write is already there, or
+re-attaches the files to a catalog that lacks the table.
 
-The fix is a manifest: at ident time each fingerprint gets a
-``<fingerprint>.manifest.json`` recording the absolute source paths
-and their (size, mtime); the same call then sweeps SIBLING
-fingerprints of the same kind and removes any whose recorded sources
-are gone or have changed stats — exactly the stranded class. Siblings
+A fresh directory per source version would strand the old one forever:
+nothing maps it back to a source to notice the source changed. So each
+identity call also writes a ``<name>.manifest.json`` recording the
+absolute source paths and their fingerprints, then sweeps SIBLING
+layouts of the same kind and removes any whose recorded sources are gone
+or have changed fingerprints — exactly the stranded class. Siblings
 whose sources still match are other LIVE corpora (e.g. sf0.001 beside
 sf0.1) and are kept.
 
 Manifest placement (r9 ADVICE, medium): the manifest lives BESIDE the
-layout directory (``base_dir/<fp>.manifest.json``), not inside it.
+layout directory (``base_dir/<name>.manifest.json``), not inside it.
 Several ensure_* builds write the layout with
-``mode('overwrite').saveAsTable`` rooted at the fingerprint directory,
+``mode('overwrite').saveAsTable`` rooted at the layout directory,
 which deletes everything inside — an in-dir ``_manifest.json`` was
 wiped by its own build, so the next ident call for a sibling corpus
 saw a manifest-less LIVE layout and rmtree'd it, breaking build-once
@@ -40,17 +46,29 @@ cache would need a lease, which is out of scope for a local .cache.
 
 from __future__ import annotations
 
+import hashlib
 import json
 import os
 import shutil
 
+from ai_etl_studio_spark.freshness import fingerprint
+
 _MANIFEST = "_manifest.json"  # legacy in-dir name (read-only compat)
 _SUFFIX = ".manifest.json"  # external sibling-file name
 
+#: Default parent of every layout kind: ``<repo>/.cache``.
+CACHE_ROOT = os.path.join(
+    os.path.dirname(os.path.dirname(os.path.abspath(__file__))), ".cache"
+)
 
-def _stat_entry(path: str) -> list:
-    st = os.stat(path)
-    return [st.st_size, int(st.st_mtime)]
+
+def _entry(path: str) -> list:
+    """``path``'s fingerprint in the manifest's JSON form."""
+    return [list(e) for e in fingerprint(path)]
+
+
+def _sources(paths: list[str]) -> dict[str, list]:
+    return {os.path.abspath(p): _entry(p) for p in paths}
 
 
 def _external_manifest_path(layout_dir: str) -> str:
@@ -62,19 +80,18 @@ def _external_manifest_path(layout_dir: str) -> str:
 
 
 def write_manifest(layout_dir: str, source_files: list[str]) -> None:
-    """Record the layout's source files and their stats (idempotent —
-    re-written on every ident call). Written OUTSIDE the layout dir so
-    a ``mode('overwrite')`` build rooted there cannot delete it."""
+    """Record the layout's source files and their fingerprints
+    (idempotent). Written OUTSIDE the layout dir so a
+    ``mode('overwrite')`` build rooted there cannot delete it."""
+    _store_manifest(layout_dir, _sources(source_files))
+
+
+def _store_manifest(layout_dir: str, sources: dict[str, list]) -> None:
     os.makedirs(layout_dir, exist_ok=True)
-    manifest = {
-        "sources": {
-            os.path.abspath(f): _stat_entry(f) for f in source_files
-        }
-    }
     target = _external_manifest_path(layout_dir)
     tmp = target + ".tmp"
     with open(tmp, "w") as fh:
-        json.dump(manifest, fh, indent=1, sort_keys=True)
+        json.dump({"sources": sources}, fh, indent=1, sort_keys=True)
     os.replace(tmp, target)
     # Drop a stale legacy in-dir copy so it can never disagree.
     legacy = os.path.join(layout_dir, _MANIFEST)
@@ -99,7 +116,7 @@ def _read_sources(base_dir: str, name: str) -> dict | None:
 
 
 def gc_stale_siblings(base_dir: str, keep_name: str) -> list[str]:
-    """Remove sibling fingerprint directories of ``base_dir`` whose
+    """Remove sibling layout directories of ``base_dir`` whose
     manifest sources are missing/changed, plus manifest-less partial
     builds (no ``_SUCCESS``). Manifest-less dirs WITH ``_SUCCESS`` are
     completed live layouts and are kept. Returns the removed directory
@@ -128,10 +145,10 @@ def gc_stale_siblings(base_dir: str, keep_name: str) -> list[str]:
                     os.path.join(d, "_SUCCESS")
                 )
             else:
-                for f, st in sources.items():
-                    if not os.path.exists(f) or _stat_entry(f) != st:
-                        stale = True
-                        break
+                stale = any(
+                    not os.path.exists(f) or _entry(f) != fp
+                    for f, fp in sources.items()
+                )
         if stale:
             shutil.rmtree(d, ignore_errors=True)
             for mpath in (os.path.join(base_dir, name + _SUFFIX),):
@@ -146,10 +163,81 @@ def gc_stale_siblings(base_dir: str, keep_name: str) -> list[str]:
 def manifest_and_gc(
     layout_dir: str, source_files: list[str]
 ) -> list[str]:
-    """The one-call form every ident function uses: write/refresh this
-    layout's manifest, then sweep stale siblings of the same kind."""
+    """Write/refresh this layout's manifest, then sweep stale siblings of
+    the same kind; returns the removed sibling names."""
     write_manifest(layout_dir, source_files)
     return gc_stale_siblings(
         os.path.dirname(layout_dir.rstrip(os.sep)),
         os.path.basename(layout_dir.rstrip(os.sep)),
     )
+
+
+def layout_ident(
+    kind: str,
+    sf_dir: str,
+    tables: tuple[str, ...],
+    params: tuple = (),
+    base_dir: str | None = None,
+) -> tuple[str, str]:
+    """``(name, root)`` of the ``kind`` layout built from ``tables`` of
+    ``sf_dir`` with ``params``: ``name`` is ``<kind>_<digest>`` and
+    ``root`` is ``<base_dir>/<name>`` (``base_dir`` defaults to
+    ``CACHE_ROOT/<kind>``). Writes the manifest and sweeps stale
+    siblings."""
+    base_dir = os.path.abspath(base_dir or os.path.join(CACHE_ROOT, kind))
+    sources = _sources([os.path.join(sf_dir, f"{t}.parquet") for t in tables])
+    key = json.dumps([sources, list(params), base_dir], sort_keys=True)
+    name = f"{kind}_{hashlib.sha1(key.encode()).hexdigest()[:12]}"
+    root = os.path.join(base_dir, name)
+    _store_manifest(root, sources)
+    gc_stale_siblings(base_dir, name)
+    return name, root
+
+
+def build_once(
+    spark,
+    path: str,
+    build,
+    table: str | None = None,
+    columns: str = "",
+    bucket: tuple[int, str] | None = None,
+    partition_by: str | None = None,
+) -> None:
+    """Write ``build()`` as parquet at ``path`` unless a completed write
+    (``_SUCCESS``) is already there.
+
+    With ``table`` the write is saved as that catalog table, and a later
+    session whose catalog lacks it re-attaches the files with
+    ``CREATE TABLE table (columns) USING PARQUET … LOCATION path``
+    instead of rebuilding. ``bucket=(n, key)`` hash-partitions the frame
+    by ``key`` and writes it bucketed and sorted into ``n`` buckets; the
+    re-attach carries the same clause, so joins on ``key`` read
+    co-located buckets either way. ``partition_by`` writes one hive
+    directory per value of that column."""
+    if os.path.exists(os.path.join(path, "_SUCCESS")):
+        if table is not None and not spark.catalog.tableExists(table):
+            clustered = (
+                f"CLUSTERED BY ({bucket[1]}) SORTED BY ({bucket[1]}) "
+                f"INTO {bucket[0]} BUCKETS"
+                if bucket
+                else ""
+            )
+            spark.sql(
+                f"CREATE TABLE {table} ({columns}) USING PARQUET "
+                f"{clustered} LOCATION '{path}'"
+            )
+        return
+    df = build()
+    if bucket:
+        df = df.repartition(*bucket)
+    if partition_by:
+        df = df.repartition(partition_by)
+    writer = df.write.mode("overwrite").format("parquet")
+    if bucket:
+        writer = writer.bucketBy(*bucket).sortBy(bucket[1])
+    if partition_by:
+        writer = writer.partitionBy(partition_by)
+    if table is None:
+        writer.save(path)
+    else:
+        writer.option("path", path).saveAsTable(table)

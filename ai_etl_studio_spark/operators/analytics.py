@@ -20,6 +20,7 @@ from pyspark.sql import functions as F
 
 from ai_etl_studio_spark.catalog import load_table
 from ai_etl_studio_spark.functions.exact import cents, csum, net_cents, sql_dsum
+from ai_etl_studio_spark.layout_cache import build_once, layout_ident
 from ai_etl_studio_spark.operators import register
 from ai_etl_studio_spark.operators.relational import NET
 
@@ -1851,33 +1852,6 @@ def _pagerank_iterate(edges: DataFrame) -> DataFrame:
 PR_BUCKETS = 32
 
 
-def _pagerank_index_ident(sf_dir: str, base_dir: str | None = None) -> tuple[str, str]:
-    """(table_name, path) for the persisted edge index of ``sf_dir``.
-
-    The name is fingerprinted on the source data (lineitem size+mtime),
-    so a refreshed dataset gets a fresh index instead of a stale one."""
-    import hashlib
-    import os
-
-    if base_dir is None:
-        import pathlib
-
-        base_dir = str(pathlib.Path(__file__).resolve().parents[2] / ".cache" / "pr_edges")
-    st = os.stat(os.path.join(sf_dir, "lineitem.parquet"))
-    # base_dir is part of the identity (ADVICE r3): same corpus, two
-    # locations → two catalog names, never a silent re-point
-    fp = hashlib.sha1(
-        f"{os.path.abspath(sf_dir)}|{st.st_size}|{int(st.st_mtime)}|{PR_BUCKETS}"
-        f"|{os.path.abspath(base_dir)}".encode()
-    ).hexdigest()[:12]
-    tbl = f"pr_edges_{fp}"
-    path = os.path.join(base_dir, tbl)
-    from ai_etl_studio_spark.layout_cache import manifest_and_gc
-
-    manifest_and_gc(path, [os.path.join(sf_dir, "lineitem.parquet")])
-    return tbl, path
-
-
 def ensure_pagerank_edge_index(
     spark: SparkSession, sf_dir: str, base_dir: str | None = None
 ) -> str:
@@ -1890,29 +1864,17 @@ def ensure_pagerank_edge_index(
     the existing files with a matching CLUSTERED BY spec, so iterations
     read pre-bucketed edges (no extraction, no edge-side shuffle when
     ranks are too big to broadcast)."""
-    import os
-
-    tbl, path = _pagerank_index_ident(sf_dir, base_dir)
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
-        (
-            _pagerank_raw_edges(spark, sf_dir)
-            .repartition(PR_BUCKETS, "src")
-            .write.mode("overwrite")
-            .format("parquet")
-            .bucketBy(PR_BUCKETS, "src")
-            .sortBy("src")
-            .option("path", path)
-            .saveAsTable(tbl)
-        )
-    elif not spark.catalog.tableExists(tbl):
-        spark.sql(
-            f"""
-            CREATE TABLE {tbl} (src BIGINT, dst BIGINT, d BIGINT)
-            USING PARQUET
-            CLUSTERED BY (src) SORTED BY (src) INTO {PR_BUCKETS} BUCKETS
-            LOCATION '{path}'
-            """
-        )
+    tbl, path = layout_ident(
+        "pr_edges", sf_dir, ("lineitem", "orders"), (PR_BUCKETS,), base_dir
+    )
+    build_once(
+        spark,
+        path,
+        lambda: _pagerank_raw_edges(spark, sf_dir),
+        table=tbl,
+        columns="src BIGINT, dst BIGINT, d BIGINT",
+        bucket=(PR_BUCKETS, "src"),
+    )
     return tbl
 
 

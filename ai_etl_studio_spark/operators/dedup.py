@@ -40,6 +40,7 @@ from ai_etl_studio_spark.functions.texthash import (
     word_shingles,
     tokens,
 )
+from ai_etl_studio_spark.layout_cache import build_once, layout_ident
 from ai_etl_studio_spark.operators import register
 
 SHINGLE_N = 3
@@ -863,35 +864,6 @@ def line_dedup_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Build-once boilerplate-line index + incremental serve path
 # ---------------------------------------------------------------------------
 
-def _line_index_ident(sf_dir: str, base_dir: str | None = None) -> tuple[str, str]:
-    """(table_name, path) for the persisted boilerplate-digest index of
-    ``sf_dir`` — fingerprinted on the corpus file like the PageRank edge
-    index (analytics.py), so a refreshed corpus rebuilds."""
-    import hashlib
-    import os
-
-    if base_dir is None:
-        import pathlib
-
-        base_dir = str(
-            pathlib.Path(__file__).resolve().parents[2] / ".cache" / "bp_lines"
-        )
-    st = os.stat(os.path.join(sf_dir, "documents.parquet"))
-    # base_dir is part of the identity: the same corpus indexed into two
-    # locations must get two catalog names, or the second ensure_* call
-    # silently re-points the shared table (ADVICE r3)
-    fp = hashlib.sha1(
-        f"{os.path.abspath(sf_dir)}|{st.st_size}|{int(st.st_mtime)}"
-        f"|{LINE_W}|{LINE_DROP_DF}|{os.path.abspath(base_dir)}".encode()
-    ).hexdigest()[:12]
-    tbl = f"bp_lines_{fp}"
-    path = os.path.join(base_dir, tbl)
-    from ai_etl_studio_spark.layout_cache import manifest_and_gc
-
-    manifest_and_gc(path, [os.path.join(sf_dir, "documents.parquet")])
-    return tbl, path
-
-
 def _doc_lines(d: DataFrame) -> DataFrame:
     """(doc_id, line_no, line, h): fixed LINE_W-token windows + digest,
     built with a narrow transform + ONE posexplode (no token explode)."""
@@ -919,27 +891,21 @@ def ensure_boilerplate_index(
     ingest batch then cleans itself with a BROADCAST anti-join against
     this (tiny: |boilerplate lines| × 16 bytes) table — cost scales with
     the batch, not the corpus."""
-    import os
-
-    tbl, path = _line_index_ident(sf_dir, base_dir)
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
-        d = load_table(spark, sf_dir, "documents")
-        (
-            _doc_lines(d)
-            .groupBy("h")
-            .agg(F.countDistinct("doc_id").alias("df"))
-            .filter(F.col("df") >= LINE_DROP_DF)
-            .select("h")
-            .coalesce(1)
-            .write.mode("overwrite")
-            .format("parquet")
-            .option("path", path)
-            .saveAsTable(tbl)
-        )
-    elif not spark.catalog.tableExists(tbl):
-        spark.sql(
-            f"CREATE TABLE {tbl} (h STRING) USING PARQUET LOCATION '{path}'"
-        )
+    tbl, path = layout_ident(
+        "bp_lines", sf_dir, ("documents",), (LINE_W, LINE_DROP_DF), base_dir
+    )
+    build_once(
+        spark,
+        path,
+        lambda: _doc_lines(load_table(spark, sf_dir, "documents"))
+        .groupBy("h")
+        .agg(F.countDistinct("doc_id").alias("df"))
+        .filter(F.col("df") >= LINE_DROP_DF)
+        .select("h")
+        .coalesce(1),
+        table=tbl,
+        columns="h STRING",
+    )
     return tbl
 
 
@@ -1729,33 +1695,6 @@ def substring_dup_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _substring_span_report(tagged)
 
 
-def _substr_index_ident(sf_dir: str, base_dir: str | None = None) -> tuple[str, str]:
-    """(table_name, path) for the persisted duplicated-window digest
-    index — corpus-file fingerprint + base_dir identity, exactly the
-    _line_index_ident contract (ADVICE r3: base_dir is part of the
-    identity so two locations never share a catalog name)."""
-    import hashlib
-    import os
-
-    if base_dir is None:
-        import pathlib
-
-        base_dir = str(
-            pathlib.Path(__file__).resolve().parents[2] / ".cache" / "substr_win"
-        )
-    st = os.stat(os.path.join(sf_dir, "documents.parquet"))
-    fp = hashlib.sha1(
-        f"{os.path.abspath(sf_dir)}|{st.st_size}|{int(st.st_mtime)}"
-        f"|{SUBSTR_W}|{SUBSTR_DF}|{os.path.abspath(base_dir)}".encode()
-    ).hexdigest()[:12]
-    tbl = f"substr_win_{fp}"
-    path = os.path.join(base_dir, tbl)
-    from ai_etl_studio_spark.layout_cache import manifest_and_gc
-
-    manifest_and_gc(path, [os.path.join(sf_dir, "documents.parquet")])
-    return tbl, path
-
-
 def ensure_substring_index(
     spark: SparkSession, sf_dir: str, base_dir: str | None = None
 ) -> str:
@@ -1765,27 +1704,21 @@ def ensure_substring_index(
     split: the corpus-wide frequency pass runs once per snapshot, then
     every ingest batch tags its own spans with one membership join —
     cost scales with the batch, not the corpus."""
-    import os
-
-    tbl, path = _substr_index_ident(sf_dir, base_dir)
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
-        d = load_table(spark, sf_dir, "documents")
-        (
-            _doc_windows(d)
-            .groupBy("h")
-            .agg(F.countDistinct("doc_id").alias("df"))
-            .filter(F.col("df") >= SUBSTR_DF)
-            .select("h")
-            .coalesce(1)
-            .write.mode("overwrite")
-            .format("parquet")
-            .option("path", path)
-            .saveAsTable(tbl)
-        )
-    elif not spark.catalog.tableExists(tbl):
-        spark.sql(
-            f"CREATE TABLE {tbl} (h BIGINT) USING PARQUET LOCATION '{path}'"
-        )
+    tbl, path = layout_ident(
+        "substr_win", sf_dir, ("documents",), (SUBSTR_W, SUBSTR_DF), base_dir
+    )
+    build_once(
+        spark,
+        path,
+        lambda: _doc_windows(load_table(spark, sf_dir, "documents"))
+        .groupBy("h")
+        .agg(F.countDistinct("doc_id").alias("df"))
+        .filter(F.col("df") >= SUBSTR_DF)
+        .select("h")
+        .coalesce(1),
+        table=tbl,
+        columns="h BIGINT",
+    )
     return tbl
 
 

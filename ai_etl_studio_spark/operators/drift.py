@@ -4718,17 +4718,10 @@ _DELAY_GRAIN_CTE = """
 """
 
 
-def _delay_grain(
-    spark: SparkSession, sf_dir: str, checkpoint: bool = True
-) -> DataFrame:
+def _delay_grain(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Spark twin of ``_DELAY_GRAIN_CTE``: the (priority, delay, count)
     table, checkpointed — every downstream window/median/variance runs
-    on ≤ |priorities|·~125 rows, never on fact grain.
-
-    ``checkpoint=False`` (r12) lets a SINGLE-consumer query skip the
-    materialization job and fuse the grain into its one aggregation —
-    Catalyst then also pushes the query's priority filter below the
-    grain groupBy into the scan."""
+    on ≤ |priorities|·~125 rows, never on fact grain."""
     li = load_table(spark, sf_dir, "lineitem")
     o = load_table(spark, sf_dir, "orders")
     g = (
@@ -4744,7 +4737,7 @@ def _delay_grain(
         .groupBy("pr", "v")
         .agg(F.count(F.lit(1)).cast("bigint").alias("c"))
     )
-    return g.localCheckpoint() if checkpoint else g
+    return g.localCheckpoint()
 
 
 @register(

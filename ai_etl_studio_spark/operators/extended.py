@@ -12,6 +12,7 @@ from pyspark.sql import functions as F
 
 from ai_etl_studio_spark.catalog import load_table, read_parquet
 from ai_etl_studio_spark.functions.exact import sql_dsum, dsum
+from ai_etl_studio_spark.layout_cache import build_once, layout_ident
 from ai_etl_studio_spark.operators import register
 from ai_etl_studio_spark.plans.snapshot import capture_stage
 
@@ -1085,44 +1086,6 @@ def null_ordering_semantics(spark: SparkSession, sf_dir: str) -> DataFrame:
 _LAYOUT_BUCKETS = 16
 
 
-def _layout_ident(
-    kind: str,
-    sf_dir: str,
-    base_dir: str | None = None,
-    tables: tuple[str, ...] = ("orders",),
-):
-    """(name_prefix, path_root) for a persisted storage layout of
-    ``sf_dir``, fingerprinted on the source data (size+mtime of EVERY
-    table the layout projects — r8 ADVICE: fingerprinting only orders
-    let a regenerated lineitem.parquet silently reuse the stale
-    bucketed lineitem projection) and on base_dir (same corpus, two
-    locations -> two names — the r3 ADVICE rule the pagerank/IVF
-    indexes follow)."""
-    import hashlib
-    import os
-    import pathlib
-
-    if base_dir is None:
-        base_dir = str(
-            pathlib.Path(__file__).resolve().parents[2] / ".cache" / kind
-        )
-    stats = "|".join(
-        f"{t}:{(st := os.stat(os.path.join(sf_dir, f'{t}.parquet'))).st_size}"
-        f":{int(st.st_mtime)}"
-        for t in tables
-    )
-    fp = hashlib.sha1(f"{base_dir}|{sf_dir}|{stats}".encode()).hexdigest()[:12]
-    root = os.path.join(base_dir, fp)
-    # cache hygiene (r8 verdict item 6): record this layout's sources,
-    # drop stranded sibling fingerprints whose sources changed/vanished
-    from ai_etl_studio_spark.layout_cache import manifest_and_gc
-
-    manifest_and_gc(
-        root, [os.path.join(sf_dir, f"{t}.parquet") for t in tables]
-    )
-    return f"{kind}_{fp}", root
-
-
 def ensure_bucketed_orderkey_tables(
     spark: SparkSession, sf_dir: str, base_dir: str | None = None
 ) -> tuple[str, str]:
@@ -1136,8 +1099,9 @@ def ensure_bucketed_orderkey_tables(
 
     from ai_etl_studio_spark.functions.exact import net_cents
 
-    prefix, root = _layout_ident(
-        "bucketed_ok", sf_dir, base_dir, tables=("lineitem", "orders")
+    prefix, root = layout_ident(
+        "bucketed_ok", sf_dir, ("lineitem", "orders"), (_LAYOUT_BUCKETS,),
+        base_dir,
     )
     specs = {
         "li": (
@@ -1155,33 +1119,16 @@ def ensure_bucketed_orderkey_tables(
             "o_orderkey BIGINT, o_orderstatus STRING",
         ),
     }
-    names = {}
-    for part, (dfn, key, ddl) in specs.items():
-        tbl = f"{prefix}_{part}"
-        path = os.path.join(root, part)
-        if not os.path.exists(os.path.join(path, "_SUCCESS")):
-            (
-                dfn()
-                .repartition(_LAYOUT_BUCKETS, key)
-                .write.mode("overwrite")
-                .format("parquet")
-                .bucketBy(_LAYOUT_BUCKETS, key)
-                .sortBy(key)
-                .option("path", path)
-                .saveAsTable(tbl)
-            )
-        elif not spark.catalog.tableExists(tbl):
-            spark.sql(
-                f"""
-                CREATE TABLE {tbl} ({ddl})
-                USING PARQUET
-                CLUSTERED BY ({key}) SORTED BY ({key})
-                INTO {_LAYOUT_BUCKETS} BUCKETS
-                LOCATION '{path}'
-                """
-            )
-        names[part] = tbl
-    return names["li"], names["o"]
+    for part, (build, key, columns) in specs.items():
+        build_once(
+            spark,
+            os.path.join(root, part),
+            build,
+            table=f"{prefix}_{part}",
+            columns=columns,
+            bucket=(_LAYOUT_BUCKETS, key),
+        )
+    return f"{prefix}_li", f"{prefix}_o"
 
 
 @register(
@@ -1232,22 +1179,19 @@ def ensure_month_partitioned_orders(
     a month filter into directory pruning instead of a full scan."""
     import os
 
-    prefix, root = _layout_ident("opart_month", sf_dir, base_dir)
+    _, root = layout_ident("opart_month", sf_dir, ("orders",), (), base_dir)
     path = os.path.join(root, "orders_by_month")
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
-        (
-            load_table(spark, sf_dir, "orders")
-            .select(
-                "o_orderkey",
-                "o_orderpriority",
-                "o_totalprice",
-                F.date_format("o_orderdate", "yyyy-MM").alias("o_month"),
-            )
-            .repartition("o_month")
-            .write.mode("overwrite")
-            .partitionBy("o_month")
-            .parquet(path)
-        )
+    build_once(
+        spark,
+        path,
+        lambda: load_table(spark, sf_dir, "orders").select(
+            "o_orderkey",
+            "o_orderpriority",
+            "o_totalprice",
+            F.date_format("o_orderdate", "yyyy-MM").alias("o_month"),
+        ),
+        partition_by="o_month",
+    )
     return path
 
 
@@ -1313,9 +1257,12 @@ def ensure_zorder_orders(
     why the oracle mirrors the box query, not the Morton math."""
     import os
 
-    prefix, root = _layout_ident("zorder_cd", sf_dir, base_dir)
+    _, root = layout_ident(
+        "zorder_cd", sf_dir, ("orders",), (_Z_FILES,), base_dir
+    )
     path = os.path.join(root, "orders_zorder")
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
+
+    def build():
         o = load_table(spark, sf_dir, "orders").select(
             "o_orderkey",
             "o_custkey",
@@ -1355,14 +1302,14 @@ def ensure_zorder_orders(
                     F.shiftrightunsigned(zy, i).bitwiseAND(F.lit(1)), 2 * i
                 )
             )
-        (
+        return (
             w.withColumn("zval", zval)
             .repartitionByRange(_Z_FILES, "zval")
             .sortWithinPartitions("zval")
             .drop("zval", "c0", "c1", "d0", "d1")
-            .write.mode("overwrite")
-            .parquet(path)
         )
+
+    build_once(spark, path, build)
     return path
 
 
@@ -1420,31 +1367,28 @@ def ensure_month_dim(
 ) -> str:
     """Build-once tiny month dimension (m_month 'yyyy-MM', m_year,
     m_quarter — ~84 rows) persisted next to the month-partitioned
-    orders layout, sharing its fingerprint. The star-schema prop for
+    orders layout, sharing its layout identity. The star-schema prop for
     dynamic partition pruning: the FACT carries no month literal, the
     DIM carries the human predicate (year/quarter), and the join key is
     the fact's partition column."""
     import os
 
-    prefix, root = _layout_ident("opart_month", sf_dir, base_dir)
+    _, root = layout_ident("opart_month", sf_dir, ("orders",), (), base_dir)
     path = os.path.join(root, "month_dim")
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
-        (
-            load_table(spark, sf_dir, "orders")
-            .select(F.date_format("o_orderdate", "yyyy-MM").alias("m_month"))
-            .distinct()
-            .withColumn("m_year", F.substring("m_month", 1, 4).cast("int"))
-            .withColumn(
-                "m_quarter",
-                ((F.substring("m_month", 6, 2).cast("int") - 1) / 3).cast(
-                    "int"
-                )
-                + F.lit(1),
-            )
-            .coalesce(1)
-            .write.mode("overwrite")
-            .parquet(path)
+    build_once(
+        spark,
+        path,
+        lambda: load_table(spark, sf_dir, "orders")
+        .select(F.date_format("o_orderdate", "yyyy-MM").alias("m_month"))
+        .distinct()
+        .withColumn("m_year", F.substring("m_month", 1, 4).cast("int"))
+        .withColumn(
+            "m_quarter",
+            ((F.substring("m_month", 6, 2).cast("int") - 1) / 3).cast("int")
+            + F.lit(1),
         )
+        .coalesce(1),
+    )
     return path
 
 
@@ -1608,7 +1552,7 @@ _CBO_STATS_COLUMNS: dict[str, tuple[str, ...]] = {
     "part": ("p_partkey", "p_type"),
 }
 
-#: (applicationId, fingerprint) pairs already ANALYZE-d this app —
+#: (applicationId, table-name prefix) pairs already ANALYZE-d this app —
 #: stats live in the session catalog, so one collection per app+corpus
 #: amortizes across every CBO query (the 100 TB discipline: ANALYZE is
 #: a nightly maintenance job, not a per-query cost).
@@ -1621,22 +1565,19 @@ def ensure_column_stats(spark: SparkSession, sf_dir: str) -> dict[str, str]:
     ``ANALYZE TABLE … COMPUTE STATISTICS FOR COLUMNS`` once per
     (application, corpus). Returns {logical_name: catalog_name}.
 
-    Catalog tables are fingerprinted on the source stats (size+mtime,
-    the layout-tier rule) so a regenerated corpus gets fresh tables and
+    Catalog table names come from the layout identity
+    (``layout_cache.layout_ident``, keyed on the source tables' file
+    fingerprints) so a regenerated corpus gets fresh tables and
     fresh statistics rather than silently reusing stale NDVs — stale
     stats are WORSE than no stats, because the reorder confidently
     picks a wrong tree instead of keeping the written one."""
-    import hashlib
     import os
 
-    stats = "|".join(
-        f"{t}:{(st := os.stat(os.path.join(sf_dir, f'{t}.parquet'))).st_size}"
-        f":{int(st.st_mtime)}"
-        for t in sorted(_CBO_STATS_COLUMNS)
-    )
-    fp = hashlib.sha1(f"{sf_dir}|{stats}".encode()).hexdigest()[:12]
-    names = {t: f"cbo_{fp}_{t}" for t in _CBO_STATS_COLUMNS}
-    key = (spark.sparkContext.applicationId, fp)
+    # the tables read the source files in place: only the name (and the
+    # manifest beside an empty layout dir) comes from the identity call
+    prefix, _ = layout_ident("cbo", sf_dir, tuple(sorted(_CBO_STATS_COLUMNS)))
+    names = {t: f"{prefix}_{t}" for t in _CBO_STATS_COLUMNS}
+    key = (spark.sparkContext.applicationId, prefix)
     if key in _STATS_READY:
         return names
     for t, cols in _CBO_STATS_COLUMNS.items():

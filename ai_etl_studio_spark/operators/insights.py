@@ -21,6 +21,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ai_etl_studio_spark.catalog import load_table
+from ai_etl_studio_spark.freshness import SessionMemo
 from ai_etl_studio_spark.operators import register
 from ai_etl_studio_spark.plans.snapshot import capture_stage
 
@@ -5022,9 +5023,23 @@ _CP_GRAPH_CTE = f"""
 #: and localCheckpoint'ed frames stay valid for the session — rebuilding
 #: the support-filter + degree-cap pipeline per operator would pay the
 #: ~2 s extraction eight times per bench pass (the ensure_* index
-#: convention applied to in-session frames). Keyed by applicationId so
-#: a new session never sees another session's dead RDDs.
-_CP_GRAPH_CACHE: dict = {}
+#: convention applied to in-session frames). A ``SessionMemo`` keyed by
+#: (graph kind, sf_dir): an entry from another session (dead RDDs) or
+#: over a rewritten lineitem is rebuilt.
+_CP_GRAPH_CACHE = SessionMemo()
+
+
+def _cp_memo(spark: SparkSession, sf_dir: str, kind: str, build):
+    """The ``kind`` graph frames of ``sf_dir`` from the memo, or
+    ``build()``; every graph tier derives from lineitem alone."""
+    import os as _os
+
+    return _CP_GRAPH_CACHE.fetch(
+        spark,
+        (kind, _os.path.realpath(sf_dir)),
+        [_os.path.join(sf_dir, "lineitem.parquet")],
+        build,
+    )
 
 
 def _copurchase_graph(spark: SparkSession, sf_dir: str):
@@ -5036,16 +5051,12 @@ def _copurchase_graph(spark: SparkSession, sf_dir: str):
     no join here carries a broadcast hint — AQE broadcasts the
     checkpointed (hence size-known) frames at every SF where they fit
     and falls back to shuffle joins when they don't."""
-    import os as _os
-
-    key = (
-        spark.sparkContext.applicationId,
-        "graph",
-        _os.path.realpath(sf_dir),
+    return _cp_memo(
+        spark, sf_dir, "graph", lambda: _build_copurchase_graph(spark, sf_dir)
     )
-    hit = _CP_GRAPH_CACHE.get(key)
-    if hit is not None:
-        return hit
+
+
+def _build_copurchase_graph(spark: SparkSession, sf_dir: str):
     li = load_table(spark, sf_dir, "lineitem")
     # pairs born per order from the sorted distinct part list (the
     # supplier_overlap_jaccard device) — ONE shuffle by orderkey, no
@@ -5104,8 +5115,7 @@ def _copurchase_graph(spark: SparkSession, sf_dir: str):
         e.select(F.col("y").alias("u"), F.col("x").alias("v"))
     )
     deg = adj.groupBy("u").agg(F.count(F.lit(1)).cast("bigint").alias("deg"))
-    _CP_GRAPH_CACHE[key] = (e, adj, deg, d0)
-    return _CP_GRAPH_CACHE[key]
+    return e, adj, deg, d0
 
 
 @register(
@@ -5314,17 +5324,12 @@ def _cp_cc_labels(spark: SparkSession, sf_dir: str):
     The converged label frame is cached per (session, sf_dir) like the
     graph itself: the components and profile operators share one
     propagation run."""
-    import os as _os
-
     e, adj, deg, _ = _copurchase_graph(spark, sf_dir)
-    key = (
-        spark.sparkContext.applicationId,
-        "cc",
-        _os.path.realpath(sf_dir),
-    )
-    hit = _CP_GRAPH_CACHE.get(key)
-    if hit is not None:
-        return hit, e, adj, deg
+    labels = _cp_memo(spark, sf_dir, "cc", lambda: _cp_propagate(adj, deg))
+    return labels, e, adj, deg
+
+
+def _cp_propagate(adj: DataFrame, deg: DataFrame) -> DataFrame:
     labels = deg.select("u").withColumn("label", F.col("u")).localCheckpoint()
     edges = adj.select(
         F.col("u").alias("src"), F.col("v").alias("dst")
@@ -5377,9 +5382,7 @@ def _cp_cc_labels(spark: SparkSession, sf_dir: str):
         raise RuntimeError(
             "copurchase CC label propagation did not converge in 12 rounds"
         )
-    out = labels.select("u", "label").localCheckpoint()
-    _CP_GRAPH_CACHE[key] = out
-    return out, e, adj, deg
+    return labels.select("u", "label").localCheckpoint()
 
 
 @register(
@@ -6280,16 +6283,12 @@ def _copurchase_wgraph(spark: SparkSession, sf_dir: str):
     (same shuffle key as the pair fan-out), one pair-weight rollup, one
     join onto the checkpointed capped edges. Hint-free — AQE broadcasts
     the small side where it fits."""
-    import os as _os
-
-    key = (
-        spark.sparkContext.applicationId,
-        "wgraph",
-        _os.path.realpath(sf_dir),
+    return _cp_memo(
+        spark, sf_dir, "wgraph", lambda: _build_copurchase_wgraph(spark, sf_dir)
     )
-    hit = _CP_GRAPH_CACHE.get(key)
-    if hit is not None:
-        return hit
+
+
+def _build_copurchase_wgraph(spark: SparkSession, sf_dir: str):
     e, adj, deg, _ = _copurchase_graph(spark, sf_dir)
     li = load_table(spark, sf_dir, "lineitem")
     # ONE exchange feeds BOTH rollups (r12, §2.4): hash-partitioning
@@ -6337,8 +6336,7 @@ def _copurchase_wgraph(spark: SparkSession, sf_dir: str):
         F.count(F.lit(1)).cast("bigint").alias("deg"),
         F.sum("w").cast("bigint").alias("s"),
     )
-    _CP_GRAPH_CACHE[key] = (ew, adjw, strength)
-    return _CP_GRAPH_CACHE[key]
+    return ew, adjw, strength
 
 
 @register(

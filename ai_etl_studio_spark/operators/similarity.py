@@ -25,6 +25,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ai_etl_studio_spark.catalog import load_table, spread_small_scan
+from ai_etl_studio_spark.layout_cache import build_once, layout_ident
 from ai_etl_studio_spark.operators import register
 
 TOPK = 10
@@ -1400,34 +1401,6 @@ def _pq_serve(sub: DataFrame, anch: DataFrame, codes: DataFrame) -> DataFrame:
     )
 
 
-def _pq_index_ident(sf_dir: str, base_dir: str | None = None) -> tuple[str, str]:
-    """(table_name, path) for the persisted PQ code table of ``sf_dir``
-    (fingerprinted on the embeddings file + geometry, like the PageRank
-    edge and boilerplate-line indexes)."""
-    import hashlib
-    import os
-
-    if base_dir is None:
-        import pathlib
-
-        base_dir = str(
-            pathlib.Path(__file__).resolve().parents[2] / ".cache" / "pq_codes"
-        )
-    st = os.stat(os.path.join(sf_dir, "embeddings.parquet"))
-    # base_dir is part of the identity (ADVICE r3): same corpus, two
-    # locations → two catalog names, never a silent re-point
-    fp = hashlib.sha1(
-        f"{os.path.abspath(sf_dir)}|{st.st_size}|{int(st.st_mtime)}"
-        f"|{PQ_M}|{PQ_SUBDIM}|{PQ_K}|{_PQ_SCALE}|{os.path.abspath(base_dir)}".encode()
-    ).hexdigest()[:12]
-    tbl = f"pq_codes_{fp}"
-    path = os.path.join(base_dir, tbl)
-    from ai_etl_studio_spark.layout_cache import manifest_and_gc
-
-    manifest_and_gc(path, [os.path.join(sf_dir, "embeddings.parquet")])
-    return tbl, path
-
-
 def _pq_quantized(spark: SparkSession, sf_dir: str) -> DataFrame:
     return load_table(spark, sf_dir, "embeddings").select(
         "vec_id",
@@ -1445,24 +1418,21 @@ def ensure_pq_code_index(
     parquet table and return its name. This is PQ's whole memory story
     made concrete — 4 small ints per vector instead of 64 floats; raw
     embeddings never load again on the serving path."""
-    import os
-
-    tbl, path = _pq_index_ident(sf_dir, base_dir)
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
-        sub, anch = _pq_sub_anchors(_pq_quantized(spark, sf_dir))
-        (
-            _pq_codes(sub, anch)
-            .coalesce(1)
-            .write.mode("overwrite")
-            .format("parquet")
-            .option("path", path)
-            .saveAsTable(tbl)
-        )
-    elif not spark.catalog.tableExists(tbl):
-        spark.sql(
-            f"CREATE TABLE {tbl} (vec_id BIGINT, m INT, k BIGINT)"
-            f" USING PARQUET LOCATION '{path}'"
-        )
+    tbl, path = layout_ident(
+        "pq_codes",
+        sf_dir,
+        ("embeddings",),
+        (PQ_M, PQ_SUBDIM, PQ_K, _PQ_SCALE),
+        base_dir,
+    )
+    build_once(
+        spark,
+        path,
+        lambda: _pq_codes(*_pq_sub_anchors(_pq_quantized(spark, sf_dir)))
+        .coalesce(1),
+        table=tbl,
+        columns="vec_id BIGINT, m INT, k BIGINT",
+    )
     return tbl
 
 

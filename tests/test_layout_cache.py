@@ -1,7 +1,8 @@
-"""Layout-cache hygiene (r8 verdict item 6): fingerprinted build-once
-layouts get a source manifest at ident time, and stranded sibling
-fingerprints — sources changed or vanished — are swept. No Spark
-needed: ident functions only stat the source files."""
+"""Layout identity and cache hygiene (r8 verdict item 6): a build-once
+layout's name hashes its sources' file fingerprints, params and base
+dir; each ident call writes a source manifest, and stranded sibling
+layouts — sources changed or vanished — are swept. No Spark needed:
+the identity only stats the source files."""
 
 from __future__ import annotations
 
@@ -11,6 +12,7 @@ import time
 
 from ai_etl_studio_spark.layout_cache import (
     gc_stale_siblings,
+    layout_ident,
     manifest_and_gc,
     write_manifest,
 )
@@ -73,27 +75,91 @@ def test_unreadable_manifest_treated_as_stranded(tmp_path):
 
 
 def test_layout_ident_sweeps_regenerated_corpus(tmp_path):
-    """End-to-end through extended._layout_ident: regenerating
+    """End-to-end through layout_cache.layout_ident: regenerating
     lineitem.parquet (the r8 ADVICE scenario) strands the old bucketed
-    fingerprint and the next ident call removes it."""
-    from ai_etl_studio_spark.operators.extended import _layout_ident
-
+    layout and the next ident call removes it."""
     sf = tmp_path / "sf"
     sf.mkdir()
     for t in ("lineitem", "orders"):
         (sf / f"{t}.parquet").write_bytes(b"v1")
     base = str(tmp_path / "bucketed_ok")
-    _, root1 = _layout_ident(
-        "bucketed_ok", str(sf), base, tables=("lineitem", "orders")
+    _, root1 = layout_ident(
+        "bucketed_ok", str(sf), ("lineitem", "orders"), base_dir=base
     )
     time.sleep(0.01)
     (sf / "lineitem.parquet").write_bytes(b"v2-regenerated")
-    _, root2 = _layout_ident(
-        "bucketed_ok", str(sf), base, tables=("lineitem", "orders")
+    _, root2 = layout_ident(
+        "bucketed_ok", str(sf), ("lineitem", "orders"), base_dir=base
     )
     assert root1 != root2
     assert not os.path.exists(root1)
     assert os.path.exists(root2)
+
+
+def _rewrite_same_size_same_second(path, content: bytes) -> None:
+    """Rewrite ``path`` in place (same inode) with equally long
+    ``content`` and move its mtime 1 µs inside the same second."""
+    st = os.stat(path)
+    t0 = (st.st_mtime_ns // 10**9) * 10**9
+    os.utime(path, ns=(t0, t0))
+    with open(path, "r+b") as fh:
+        fh.write(content)
+    os.utime(path, ns=(t0, t0 + 1_000))
+    after = os.stat(path)
+    assert (after.st_ino, after.st_size) == (st.st_ino, st.st_size)
+
+
+def test_same_size_same_second_rewrite_gets_a_new_layout(tmp_path):
+    """Size plus whole-second mtime cannot tell these two files apart;
+    the file fingerprint's ns mtime does, so the stale layout is swept
+    and never served."""
+    sf = tmp_path / "sf"
+    sf.mkdir()
+    src = sf / "orders.parquet"
+    src.write_bytes(b"v1-orders")
+    base = str(tmp_path / "opart_month")
+    name1, root1 = layout_ident("opart_month", str(sf), ("orders",), base_dir=base)
+    _rewrite_same_size_same_second(src, b"v2-orders")
+    name2, root2 = layout_ident("opart_month", str(sf), ("orders",), base_dir=base)
+    assert (name1, root1) != (name2, root2)
+    assert not os.path.exists(root1)
+
+
+def test_part_file_rewrite_in_spark_directory_gets_a_new_layout(tmp_path):
+    """A Spark-written table is a directory; rewriting one of its part
+    files in place leaves the directory's own size and mtime alone, but
+    not the fingerprint of the files under it. Spark's bookkeeping files
+    (``_SUCCESS``, ``.crc``) are not part of the fingerprint."""
+    table = tmp_path / "sf" / "lineitem.parquet"
+    table.mkdir(parents=True)
+    part = table / "part-00000.parquet"
+    part.write_bytes(b"rows-v1")
+    (table / "_SUCCESS").write_bytes(b"")
+    base = str(tmp_path / "pr_edges")
+    sf = str(tmp_path / "sf")
+    name1, _ = layout_ident("pr_edges", sf, ("lineitem",), base_dir=base)
+    (table / ".part-00000.parquet.crc").write_bytes(b"crc")
+    assert layout_ident("pr_edges", sf, ("lineitem",), base_dir=base)[0] == name1
+    dir_before = os.stat(table)
+    _rewrite_same_size_same_second(part, b"rows-v2")
+    with open(part, "ab") as fh:  # and grow it: a different size too
+        fh.write(b"-more")
+    assert os.stat(table).st_mtime_ns == dir_before.st_mtime_ns
+    name2, _ = layout_ident("pr_edges", sf, ("lineitem",), base_dir=base)
+    assert name2 != name1
+
+
+def test_identity_hashes_params_and_base_dir(tmp_path):
+    src = _mk_source(tmp_path, "documents.parquet")
+    sf = os.path.dirname(src)
+    base = str(tmp_path / "kind")
+    a = layout_ident("bp_lines", sf, ("documents",), (8, 2), base)
+    assert layout_ident("bp_lines", sf, ("documents",), (8, 2), base) == a
+    assert layout_ident("bp_lines", sf, ("documents",), (8, 3), base) != a
+    assert a[0].startswith("bp_lines_") and a[1] == os.path.join(base, a[0])
+    # manifest beside the layout, keyed by absolute source path
+    manifest = json.load(open(a[1] + ".manifest.json"))
+    assert list(manifest["sources"]) == [os.path.abspath(src)]
 
 
 def test_gc_missing_base_dir_is_noop(tmp_path):

@@ -48,19 +48,26 @@ def test_serve_plan_has_no_frequency_shuffle(spark, tmp_path):
     assert tree.count("Exchange hashpartitioning") <= 1
 
 
-def test_index_identity_includes_base_dir(tmp_path):
+def test_index_identity_includes_base_dir(tmp_path, monkeypatch):
     """ADVICE r3: the catalog table name must differ per base_dir, or a
     second ensure_* call with a custom location silently re-points the
     shared name to different contents."""
-    from ai_etl_studio_spark.operators.analytics import _pagerank_index_ident
-    from ai_etl_studio_spark.operators.dedup import _line_index_ident
-    from ai_etl_studio_spark.operators.similarity import _pq_index_ident
+    from ai_etl_studio_spark import layout_cache
 
+    monkeypatch.setattr(layout_cache, "CACHE_ROOT", str(tmp_path / "cache"))
     sf = "/root/testdata/sf0.001"
-    for ident in (_line_index_ident, _pq_index_ident, _pagerank_index_ident):
-        default_tbl, _ = ident(sf)
-        custom_tbl, custom_path = ident(sf, str(tmp_path / "idx"))
-        assert default_tbl != custom_tbl, ident.__name__
+    for kind, tables in (
+        ("bp_lines", ("documents",)),
+        ("pq_codes", ("embeddings",)),
+        ("pr_edges", ("lineitem", "orders")),
+    ):
+        default_tbl, _ = layout_cache.layout_ident(kind, sf, tables)
+        custom_tbl, custom_path = layout_cache.layout_ident(
+            kind, sf, tables, base_dir=str(tmp_path / "idx")
+        )
+        assert default_tbl != custom_tbl, kind
         assert str(tmp_path / "idx") in custom_path
         # deterministic per (corpus, location)
-        assert custom_tbl == ident(sf, str(tmp_path / "idx"))[0]
+        assert custom_tbl == layout_cache.layout_ident(
+            kind, sf, tables, base_dir=str(tmp_path / "idx")
+        )[0]

@@ -83,15 +83,9 @@ def test_reregister_in_fresh_catalog_and_bucket_pruned_join(spark, tmp_path):
 
 def test_registered_query_uses_index(spark, tmp_path, monkeypatch):
     # point the default cache at tmp so the registry entry is hermetic
-    import ai_etl_studio_spark.operators.analytics as A
+    from ai_etl_studio_spark import layout_cache
 
-    base = str(tmp_path / "pr_cache")
-    orig = A._pagerank_index_ident
-
-    def patched(sf_dir, base_dir=None):
-        return orig(sf_dir, base_dir or base)
-
-    monkeypatch.setattr(A, "_pagerank_index_ident", patched)
+    monkeypatch.setattr(layout_cache, "CACHE_ROOT", str(tmp_path / "pr_cache"))
     got = [tuple(r) for r in pagerank_from_index(spark, SF_DIR).collect()]
     want = [tuple(r) for r in pagerank_bipartite(spark, SF_DIR).collect()]
     assert got == want

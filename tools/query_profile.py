@@ -1,20 +1,27 @@
-"""Round-11 optimization profiler.
+"""Per-query profiler, timed the way bench.py times the registry.
 
 Times named queries exactly like bench.py (noop sink, same session
-factory, warmup pass at sf0.001), and additionally records per-query
-job/stage/task counts from the status tracker plus the formatted plan.
+factory, warmup pass at sf0.001, copurchase graph memo cleared before
+every timed run), and additionally records per-query job/stage/task
+counts from the status tracker plus, with --plans-dir, the formatted
+plan. --conf overlays Spark confs on the session, for A/B runs of a
+config change: run once without it for the baseline, then once per
+overlay, in separate processes (static confs like spark.driver.memory
+need a fresh JVM).
 
 Usage:
-  python tools/profile_r11.py [--n N] [--plans-dir DIR] name [name ...]
-  python tools/profile_r11.py --top K          # K most expensive from BENCH_full_latest.json
+  python tools/query_profile.py [--n N] [--plans-dir DIR] [--conf JSON] name [name ...]
+  python tools/query_profile.py --top K        # K most expensive from BENCH_full_latest.json
 
 Env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1), SPARK_GRAFT_CPUS.
 Prints one JSON line per query:
   {"name": ..., "secs": [..], "median": s, "jobs": n, "stages": n, "tasks": n}
+then {"conf": {...}, "total_median": s}.
 """
 
 from __future__ import annotations
 
+import argparse
 import json
 import os
 import statistics
@@ -23,41 +30,39 @@ import time
 
 
 def main() -> None:
-    args = sys.argv[1:]
-    n = 3
-    plans_dir = None
-    top = 0
-    names: list[str] = []
-    i = 0
-    while i < len(args):
-        if args[i] == "--n":
-            n = int(args[i + 1]); i += 2
-        elif args[i] == "--plans-dir":
-            plans_dir = args[i + 1]; i += 2
-        elif args[i] == "--top":
-            top = int(args[i + 1]); i += 2
-        else:
-            names.append(args[i]); i += 1
+    ap = argparse.ArgumentParser()
+    ap.add_argument("names", nargs="*")
+    ap.add_argument("--n", type=int, default=3)
+    ap.add_argument("--plans-dir")
+    ap.add_argument("--top", type=int, default=0)
+    ap.add_argument("--conf", type=json.loads, default={},
+                    help="JSON object of Spark confs to overlay")
+    args = ap.parse_args()
+    n, names = args.n, list(args.names)
 
     repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     sys.path.insert(0, repo)
-    if top:
+    if args.top:
         with open(os.path.join(repo, "BENCH_full_latest.json")) as fh:
             b = json.load(fh)
         names += [
-            k for k, _ in sorted(b["queries"].items(), key=lambda kv: -kv[1])[:top]
+            k for k, _ in sorted(b["queries"].items(), key=lambda kv: -kv[1])[:args.top]
         ]
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    from ai_etl_studio_spark.catalog import load_table
     from ai_etl_studio_spark.session import get_spark
     from ai_etl_studio_spark.operators import load_all
+    from ai_etl_studio_spark.operators.insights import _CP_GRAPH_CACHE
+    from ai_etl_studio_spark.plans.guard import explain_str
 
-    spark = get_spark(app_name="profile-r11")
+    spark = get_spark(app_name="profile", extra_conf=args.conf)
     queries, _ = load_all()
     sc = spark.sparkContext
     tracker = sc.statusTracker()
 
-    # same warm protocol as bench.py
+    # same warm protocol as bench.py, plus one read of the biggest table
+    load_table(spark, sf_dir, "lineitem").count()
     warm_dir = "/root/testdata/sf0.001"
     for name in names:
         try:
@@ -70,21 +75,16 @@ def main() -> None:
     out = {}
     for name in names:
         fn = queries[name]
-        if plans_dir:
-            os.makedirs(plans_dir, exist_ok=True)
-            try:
-                df = fn(spark, sf_dir)
-                plan = df._sc._jvm.PythonSQLUtils.explainString(  # type: ignore[attr-defined]
-                    df._jdf.queryExecution(), "formatted"
-                )
-            except Exception:
-                plan = df._jdf.queryExecution().explainString("formatted")
-            with open(os.path.join(plans_dir, f"{name}.txt"), "w") as fh:
+        if args.plans_dir:
+            os.makedirs(args.plans_dir, exist_ok=True)
+            plan = explain_str(fn(spark, sf_dir), "formatted")
+            with open(os.path.join(args.plans_dir, f"{name}.txt"), "w") as fh:
                 fh.write(plan)
         secs = []
         jobs0 = tracker.getJobIdsForGroup(None)
         sc.setJobDescription(f"profile:{name}")
         for _ in range(n):
+            _CP_GRAPH_CACHE.clear()  # bench.py parity: no cross-query memo
             t0 = time.perf_counter()
             fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
             secs.append(round(time.perf_counter() - t0, 3))
@@ -110,7 +110,10 @@ def main() -> None:
         }
         out[name] = rec
         print(json.dumps(rec), flush=True)
-    print(json.dumps({"total_median": round(sum(r["median"] for r in out.values()), 3)}))
+    print(json.dumps({
+        "conf": args.conf,
+        "total_median": round(sum(r["median"] for r in out.values()), 3),
+    }))
 
 
 if __name__ == "__main__":
