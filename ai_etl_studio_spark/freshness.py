@@ -3,12 +3,13 @@
 Every artifact the engine derives from a base table answers that question
 with ``fingerprint`` and nothing else: the catalog's schema handle, the
 build-once layouts and CBO statistics tables (through
-``layout_cache.layout``), and the in-session copurchase graph memos. The
-fingerprint is ``(relpath, inode, size, ns mtime)`` of every data file
-under a path, listed recursively with Spark's hidden-file rule. A rewrite
-in place changes the inode, the size or the ns mtime, also when it keeps
-the size and lands inside the same second, and a rewrite of one part file
-of a Spark-written directory changes that file's entry.
+``layout_cache.layout_ident``), and the in-session copurchase graph
+memos. The fingerprint is ``(relpath, inode, size, ns mtime)`` of every
+data file under a path, listed recursively with Spark's hidden-file
+rule. A rewrite in place changes the inode, the size or the ns mtime,
+also when it keeps the size and lands inside the same second, and a
+rewrite of one part file of a Spark-written directory changes that
+file's entry.
 
 ``SessionMemo`` is the one in-session memo over that rule. It holds one
 entry per key, stamped with the SparkContext application id and the

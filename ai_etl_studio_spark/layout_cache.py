@@ -67,7 +67,9 @@ def _entry(path: str) -> list:
     return [list(e) for e in fingerprint(path)]
 
 
-def _sources(paths: list[str]) -> dict[str, list]:
+def source_fingerprints(paths: list[str]) -> dict[str, list]:
+    """``{absolute path: fingerprint}`` of ``paths``, in the manifest's
+    JSON form."""
     return {os.path.abspath(p): _entry(p) for p in paths}
 
 
@@ -79,14 +81,10 @@ def _external_manifest_path(layout_dir: str) -> str:
     )
 
 
-def write_manifest(layout_dir: str, source_files: list[str]) -> None:
-    """Record the layout's source files and their fingerprints
-    (idempotent). Written OUTSIDE the layout dir so a
-    ``mode('overwrite')`` build rooted there cannot delete it."""
-    _store_manifest(layout_dir, _sources(source_files))
-
-
-def _store_manifest(layout_dir: str, sources: dict[str, list]) -> None:
+def write_manifest(layout_dir: str, sources: dict[str, list]) -> None:
+    """Record the layout's ``source_fingerprints`` (idempotent). Written
+    OUTSIDE the layout dir so a ``mode('overwrite')`` build rooted there
+    cannot delete it."""
     os.makedirs(layout_dir, exist_ok=True)
     target = _external_manifest_path(layout_dir)
     tmp = target + ".tmp"
@@ -160,12 +158,10 @@ def gc_stale_siblings(base_dir: str, keep_name: str) -> list[str]:
     return removed
 
 
-def manifest_and_gc(
-    layout_dir: str, source_files: list[str]
-) -> list[str]:
+def manifest_and_gc(layout_dir: str, sources: dict[str, list]) -> list[str]:
     """Write/refresh this layout's manifest, then sweep stale siblings of
     the same kind; returns the removed sibling names."""
-    write_manifest(layout_dir, source_files)
+    write_manifest(layout_dir, sources)
     return gc_stale_siblings(
         os.path.dirname(layout_dir.rstrip(os.sep)),
         os.path.basename(layout_dir.rstrip(os.sep)),
@@ -185,12 +181,13 @@ def layout_ident(
     ``CACHE_ROOT/<kind>``). Writes the manifest and sweeps stale
     siblings."""
     base_dir = os.path.abspath(base_dir or os.path.join(CACHE_ROOT, kind))
-    sources = _sources([os.path.join(sf_dir, f"{t}.parquet") for t in tables])
+    sources = source_fingerprints(
+        [os.path.join(sf_dir, f"{t}.parquet") for t in tables]
+    )
     key = json.dumps([sources, list(params), base_dir], sort_keys=True)
     name = f"{kind}_{hashlib.sha1(key.encode()).hexdigest()[:12]}"
     root = os.path.join(base_dir, name)
-    _store_manifest(root, sources)
-    gc_stale_siblings(base_dir, name)
+    manifest_and_gc(root, sources)
     return name, root
 
 

@@ -73,35 +73,60 @@ def test_copurchase_memo_sees_a_lineitem_rewrite(spark, tmp_path):
     from ai_etl_studio_spark.operators.insights import copurchase_triangle_census
 
     sf = _corpus_copy(tmp_path)
-    before = copurchase_triangle_census(spark, sf).collect()
-    _keep_first_third(os.path.join(sf, "lineitem.parquet"))
-    same_session = copurchase_triangle_census(spark, sf).collect()
-    insights._CP_GRAPH_CACHE.clear()
-    cleared = copurchase_triangle_census(spark, sf).collect()
+    try:
+        before = copurchase_triangle_census(spark, sf).collect()
+        _keep_first_third(os.path.join(sf, "lineitem.parquet"))
+        same_session = copurchase_triangle_census(spark, sf).collect()
+        insights._CP_GRAPH_CACHE.clear()
+        cleared = copurchase_triangle_census(spark, sf).collect()
+    finally:
+        insights._CP_GRAPH_CACHE.clear()  # no entry for the deleted copy
     assert same_session == cleared
     assert cleared != before
 
 
-def test_column_stats_tables_renamed_after_a_rewrite(spark, tmp_path):
+def test_column_stats_tables_renamed_after_a_rewrite(spark, tmp_path, monkeypatch):
     """A same-size rewrite inside the same second (only the ns mtime
     moves) must still give fresh ``cbo_*`` tables: stale column stats
-    make the join reorder confidently wrong."""
-    from ai_etl_studio_spark.operators.extended import ensure_column_stats
+    make the join reorder confidently wrong. A repeat call over
+    unchanged sources reuses the tables without a new identity call."""
+    from ai_etl_studio_spark import layout_cache
+    from ai_etl_studio_spark.operators import extended
 
+    monkeypatch.setattr(layout_cache, "CACHE_ROOT", str(tmp_path / "cache"))
+    idents = []
+
+    def counted_ident(*args):
+        idents.append(args)
+        return layout_cache.layout_ident(*args)
+
+    monkeypatch.setattr(extended, "layout_ident", counted_ident)
     sf = _corpus_copy(tmp_path)
-    names1 = ensure_column_stats(spark, sf)
-    path = os.path.join(sf, "supplier.parquet")
-    st = os.stat(path)
-    t0 = (st.st_mtime_ns // 10**9) * 10**9
-    os.utime(path, ns=(t0, t0))
-    data = Path(path).read_bytes()
-    with open(path, "r+b") as fh:
-        fh.write(data)
-    os.utime(path, ns=(t0, t0 + 1_000))
-    assert os.stat(path).st_size == st.st_size
-    names2 = ensure_column_stats(spark, sf)
-    assert set(names2) == set(names1)
-    assert all(n.startswith("cbo_") for n in names2.values())
-    assert all(names2[t] != names1[t] for t in names1)
-    for n in names2.values():
-        assert spark.catalog.tableExists(n)
+    registered: list[dict[str, str]] = []
+    try:
+        registered.append(extended.ensure_column_stats(spark, sf))
+        # a repeat over unchanged sources: no manifest write or sweep
+        assert extended.ensure_column_stats(spark, sf) == registered[0]
+        assert len(idents) == 1
+        path = os.path.join(sf, "supplier.parquet")
+        st = os.stat(path)
+        t0 = (st.st_mtime_ns // 10**9) * 10**9
+        os.utime(path, ns=(t0, t0))
+        data = Path(path).read_bytes()
+        with open(path, "r+b") as fh:
+            fh.write(data)
+        os.utime(path, ns=(t0, t0 + 1_000))
+        assert os.stat(path).st_size == st.st_size
+        registered.append(extended.ensure_column_stats(spark, sf))
+        names1, names2 = registered
+        assert set(names2) == set(names1)
+        assert all(n.startswith("cbo_") for n in names2.values())
+        assert all(names2[t] != names1[t] for t in names1)
+        for n in names2.values():
+            assert spark.catalog.tableExists(n)
+    finally:
+        # no catalog table or memo entry may outlive the deleted copy
+        for names in registered:
+            for n in names.values():
+                spark.sql(f"DROP TABLE IF EXISTS {n}")
+        extended._CBO_TABLES.pop(os.path.abspath(sf), None)

@@ -1,7 +1,8 @@
 """Layout identity and cache hygiene (r8 verdict item 6): a build-once
 layout's name hashes its sources' file fingerprints, params and base
-dir; each ident call writes a source manifest, and stranded sibling
-layouts — sources changed or vanished — are swept. No Spark needed:
+dir; each ident call writes a source manifest and sweeps stranded
+sibling layouts — sources changed or vanished — through
+``manifest_and_gc``, which the sweep tests call directly. No Spark needed:
 the identity only stats the source files."""
 
 from __future__ import annotations
@@ -14,6 +15,7 @@ from ai_etl_studio_spark.layout_cache import (
     gc_stale_siblings,
     layout_ident,
     manifest_and_gc,
+    source_fingerprints,
     write_manifest,
 )
 
@@ -28,14 +30,14 @@ def test_manifest_written_and_live_sibling_kept(tmp_path):
     src_a = _mk_source(tmp_path, "a.parquet")
     src_b = _mk_source(tmp_path, "b.parquet")
     base = tmp_path / "kind"
-    removed = manifest_and_gc(str(base / "fp_a"), [src_a])
+    removed = manifest_and_gc(str(base / "fp_a"), source_fingerprints([src_a]))
     assert removed == []
     # manifest lives BESIDE the dir (r9 ADVICE: an in-dir manifest was
     # deleted by the layout's own overwrite build)
     assert json.load(open(base / "fp_a.manifest.json"))["sources"]
     # a sibling whose source still matches is another live corpus: kept
-    manifest_and_gc(str(base / "fp_b"), [src_b])
-    removed = manifest_and_gc(str(base / "fp_a"), [src_a])
+    manifest_and_gc(str(base / "fp_b"), source_fingerprints([src_b]))
+    removed = manifest_and_gc(str(base / "fp_a"), source_fingerprints([src_a]))
     assert removed == []
     assert (base / "fp_b").exists()
 
@@ -43,11 +45,11 @@ def test_manifest_written_and_live_sibling_kept(tmp_path):
 def test_stale_sibling_removed_on_source_change(tmp_path):
     src = _mk_source(tmp_path, "a.parquet", b"v1")
     base = tmp_path / "kind"
-    manifest_and_gc(str(base / "fp_old"), [src])
+    manifest_and_gc(str(base / "fp_old"), source_fingerprints([src]))
     # regenerate the corpus: size changes -> fp_old is stranded
     time.sleep(0.01)
     open(src, "wb").write(b"v2-longer")
-    removed = manifest_and_gc(str(base / "fp_new"), [src])
+    removed = manifest_and_gc(str(base / "fp_new"), source_fingerprints([src]))
     assert removed == ["fp_old"]
     assert not (base / "fp_old").exists()
     assert (base / "fp_new").exists()
@@ -57,10 +59,10 @@ def test_vanished_source_and_manifestless_removed(tmp_path):
     src = _mk_source(tmp_path, "a.parquet")
     gone = _mk_source(tmp_path, "gone.parquet")
     base = tmp_path / "kind"
-    manifest_and_gc(str(base / "fp_gone"), [gone])
+    manifest_and_gc(str(base / "fp_gone"), source_fingerprints([gone]))
     os.remove(gone)
     (base / "fp_orphan").mkdir(parents=True)  # pre-manifest strand
-    removed = manifest_and_gc(str(base / "fp_live"), [src])
+    removed = manifest_and_gc(str(base / "fp_live"), source_fingerprints([src]))
     assert sorted(removed) == ["fp_gone", "fp_orphan"]
 
 
@@ -70,7 +72,7 @@ def test_unreadable_manifest_treated_as_stranded(tmp_path):
     bad = base / "fp_bad"
     bad.mkdir(parents=True)
     (bad / "_manifest.json").write_text("{not json")
-    removed = manifest_and_gc(str(base / "fp_live"), [src])
+    removed = manifest_and_gc(str(base / "fp_live"), source_fingerprints([src]))
     assert removed == ["fp_bad"]
 
 
@@ -170,9 +172,9 @@ def test_write_manifest_is_idempotent(tmp_path):
     src = _mk_source(tmp_path, "a.parquet")
     d = str(tmp_path / "kind" / "fp")
     mpath = str(tmp_path / "kind" / "fp.manifest.json")
-    write_manifest(d, [src])
+    write_manifest(d, source_fingerprints([src]))
     m1 = json.load(open(mpath))
-    write_manifest(d, [src])
+    write_manifest(d, source_fingerprints([src]))
     m2 = json.load(open(mpath))
     assert m1 == m2
 
@@ -187,7 +189,7 @@ def test_overwrite_build_cannot_strand_live_layout(tmp_path):
     src_a = _mk_source(tmp_path, "a.parquet")
     src_b = _mk_source(tmp_path, "b.parquet")
     base = tmp_path / "kind"
-    manifest_and_gc(str(base / "fp_a"), [src_a])
+    manifest_and_gc(str(base / "fp_a"), source_fingerprints([src_a]))
     # simulate the overwrite build: dir contents (including any in-dir
     # file) are wiped and replaced by parquet output + _SUCCESS
     shutil.rmtree(base / "fp_a")
@@ -195,7 +197,7 @@ def test_overwrite_build_cannot_strand_live_layout(tmp_path):
     (base / "fp_a" / "_SUCCESS").write_bytes(b"")
     (base / "fp_a" / "part-0.parquet").write_bytes(b"data")
     # sibling corpus ident (the bench warms sf0.001 then times sf0.1)
-    removed = manifest_and_gc(str(base / "fp_b"), [src_b])
+    removed = manifest_and_gc(str(base / "fp_b"), source_fingerprints([src_b]))
     assert removed == []
     assert (base / "fp_a" / "part-0.parquet").exists()
 
@@ -211,7 +213,7 @@ def test_manifestless_success_dir_is_kept(tmp_path):
     (done / "_SUCCESS").write_bytes(b"")
     partial = base / "fp_partial"
     partial.mkdir()
-    removed = manifest_and_gc(str(base / "fp_live"), [src])
+    removed = manifest_and_gc(str(base / "fp_live"), source_fingerprints([src]))
     assert removed == ["fp_partial"]
     assert done.exists()
 
@@ -228,5 +230,5 @@ def test_legacy_in_dir_manifest_still_honored(tmp_path):
             {"sources": {os.path.abspath(src): [2, 0]}}
         )  # stat mismatch -> stale
     )
-    removed = manifest_and_gc(str(base / "fp_live"), [src])
+    removed = manifest_and_gc(str(base / "fp_live"), source_fingerprints([src]))
     assert removed == ["fp_legacy"]
