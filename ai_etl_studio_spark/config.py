@@ -1,5 +1,5 @@
-"""Config layer: credential stores + schema-cache TTL (reference A3,
-A16, A17 — db_utils.py:24-116).
+"""Config layer: credential stores (reference A16, A17 —
+db_utils.py:24-114).
 
 The reference keeps two credential stores:
 
@@ -20,7 +20,6 @@ from __future__ import annotations
 import base64
 import json
 import os
-import time
 from dataclasses import asdict, dataclass
 from pathlib import Path
 
@@ -28,7 +27,6 @@ PERSONAL_STORE = "~/.asksql_credentials.json"
 SHARED_DIR = ".config"
 SHARED_ENC = "test_db.enc"
 SHARED_KEY = "test_db.key"
-SCHEMA_CACHE_TTL_S = 300  # reference A3: @st.cache_resource(ttl=300)
 
 
 @dataclass
@@ -130,28 +128,3 @@ def load_test_db_credentials(config_dir: str = SHARED_DIR) -> Credentials | None
     f = _fernet(get_or_create_encryption_key(config_dir))
     d = json.loads(f.decrypt(enc.read_bytes()).decode())
     return Credentials(**d)
-
-
-class SchemaCache:
-    """A3 (db_utils.py:116): memoized schema snapshot with a TTL.
-
-    The reference cached the remote-catalog round-trip for 300 s;
-    Spark's own catalog is session-local and cheap, but the TTL cache
-    still matters when the snapshot feeds prompt rendering (A4) on
-    every interaction."""
-
-    def __init__(self, ttl_s: float = SCHEMA_CACHE_TTL_S, clock=time.monotonic):
-        self.ttl_s = ttl_s
-        self._clock = clock
-        self._snapshot: dict | None = None
-        self._at: float = 0.0
-
-    def get(self, spark, refresh) -> dict:
-        now = self._clock()
-        if self._snapshot is None or now - self._at > self.ttl_s:
-            self._snapshot = refresh(spark)
-            self._at = now
-        return self._snapshot
-
-    def invalidate(self) -> None:
-        self._snapshot = None

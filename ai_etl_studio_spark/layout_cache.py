@@ -113,12 +113,34 @@ def _read_sources(base_dir: str, name: str) -> dict | None:
     return None
 
 
+def _drop_tables(names: list[str]) -> None:
+    """Drop the active session's catalog tables named after the removed
+    layouts ``names``: ``<name>`` itself (``pr_edges``, ``bp_lines``,
+    ``substr_win``, ``pq_codes``) and ``<name>_<suffix>`` (the bucketed
+    pair ``bucketed_ok_*_li``/``_o``, the CBO stats tables
+    ``cbo_*_<table>``). Left registered, they would point at deleted
+    files or carry a superseded source's statistics. Every such table is
+    external (``LOCATION``), so the drop never deletes data files."""
+    from pyspark.sql import SparkSession
+
+    spark = SparkSession.getActiveSession()
+    if spark is None:
+        return
+    for row in spark.sql("SHOW TABLES").collect():
+        t = row.tableName
+        if not row.isTemporary and any(
+            t == n or t.startswith(n + "_") for n in names
+        ):
+            spark.sql(f"DROP TABLE IF EXISTS {t}")
+
+
 def gc_stale_siblings(base_dir: str, keep_name: str) -> list[str]:
     """Remove sibling layout directories of ``base_dir`` whose
     manifest sources are missing/changed, plus manifest-less partial
-    builds (no ``_SUCCESS``). Manifest-less dirs WITH ``_SUCCESS`` are
-    completed live layouts and are kept. Returns the removed directory
-    names (for tests/logging)."""
+    builds (no ``_SUCCESS``), and drop the catalog tables named after
+    them. Manifest-less dirs WITH ``_SUCCESS`` are completed live
+    layouts and are kept. Returns the removed directory names (for
+    tests/logging)."""
     removed: list[str] = []
     try:
         names = os.listdir(base_dir)
@@ -155,6 +177,8 @@ def gc_stale_siblings(base_dir: str, keep_name: str) -> list[str]:
                 except OSError:
                     pass
             removed.append(name)
+    if removed:
+        _drop_tables(removed)
     return removed
 
 

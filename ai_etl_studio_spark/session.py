@@ -74,12 +74,9 @@ def get_spark(
         # HOST CPU STEAL (bursty /proc/stat steal time, windows move
         # between runs), not to this accumulation — this conf is block
         # hygiene, not the stall fix; N=3 medians are the stall fix.
-        # Parameterised: SPARK_GRAFT_PERIODIC_GC overrides; same default
-        # is sane on real clusters (the cleaner runs driver-side).
-        .config(
-            "spark.cleaner.periodicGC.interval",
-            os.environ.get("SPARK_GRAFT_PERIODIC_GC", "2min"),
-        )
+        # The same interval is sane on real clusters (the cleaner runs
+        # driver-side).
+        .config("spark.cleaner.periodicGC.interval", "2min")
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions or cores))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")

@@ -76,39 +76,3 @@ def write_bucketed(
     if sort_cols:
         w = w.sortBy(*sort_cols)
     w.saveAsTable(table)
-
-
-def compact_parquet(
-    spark,
-    src_path: str,
-    dst_path: str,
-    target_file_mb: int = 128,
-    sort_within_by: list[str] | None = None,
-) -> int:
-    """Small-file compaction: rewrite a parquet dataset into
-    ~``target_file_mb`` files (returns the output file count).
-
-    The 100 TB maintenance op: streaming/incremental writers and
-    over-parallel jobs leave thousands of KB-sized files; each costs a
-    task + a footer read + a NameNode entry. Compaction restores
-    scan efficiency. ``sort_within_by`` additionally clusters rows so
-    parquet row-group min/max stats become selective (poor-man's
-    Z-order for one key).
-    """
-    import math
-
-    df = spark.read.parquet(src_path)
-    # size the output from the SOURCE bytes (spark tracks them per file)
-    total_bytes = sum(
-        int(spark._jvm.org.apache.hadoop.fs.Path(f)
-            .getFileSystem(spark._jsc.hadoopConfiguration())
-            .getFileStatus(spark._jvm.org.apache.hadoop.fs.Path(f))
-            .getLen())
-        for f in df.inputFiles()
-    )
-    n_files = max(1, math.ceil(total_bytes / (target_file_mb * 1024 * 1024)))
-    out = df.repartition(n_files)
-    if sort_within_by:
-        out = out.sortWithinPartitions(*sort_within_by)
-    out.write.mode("overwrite").parquet(dst_path)
-    return n_files

@@ -1,4 +1,4 @@
-"""Config-layer parity tests (A3/A16/A17/A18) — pure Python, no Spark."""
+"""Config-layer parity tests (A16/A17/A18) — pure Python, no Spark."""
 
 from __future__ import annotations
 
@@ -6,7 +6,6 @@ import pytest
 
 from ai_etl_studio_spark.config import (
     Credentials,
-    SchemaCache,
     clear_saved_credentials,
     credentials_exist,
     load_credentials,
@@ -50,27 +49,6 @@ def test_shared_store_needs_cryptography(tmp_path, monkeypatch):
     monkeypatch.setitem(sys.modules, "cryptography.fernet", None)
     with pytest.raises(NotImplementedError):
         save_test_db_credentials(CREDS, str(tmp_path / "cfg"))
-
-
-def test_schema_cache_ttl():
-    clock = [0.0]
-    calls = []
-
-    def refresh(_spark):
-        calls.append(1)
-        return {"t": [("a", "bigint")]}
-
-    cache = SchemaCache(ttl_s=300, clock=lambda: clock[0])
-    assert cache.get(None, refresh) == {"t": [("a", "bigint")]}
-    clock[0] = 299.0
-    cache.get(None, refresh)
-    assert len(calls) == 1  # within TTL: cached
-    clock[0] = 601.0
-    cache.get(None, refresh)
-    assert len(calls) == 2  # expired: refreshed
-    cache.invalidate()
-    cache.get(None, refresh)
-    assert len(calls) == 3
 
 
 def test_schema_browser_render():

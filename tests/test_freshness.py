@@ -130,3 +130,41 @@ def test_column_stats_tables_renamed_after_a_rewrite(spark, tmp_path, monkeypatc
             for n in names.values():
                 spark.sql(f"DROP TABLE IF EXISTS {n}")
         extended._CBO_TABLES.pop(os.path.abspath(sf), None)
+
+
+def test_superseded_layout_tables_are_dropped(spark, tmp_path, monkeypatch):
+    """A rewrite of ``lineitem`` supersedes its layouts; the sweep that
+    removes them also drops the catalog tables named after them — the
+    PageRank edge table ``pr_edges_<old>``, the bucketed pair
+    ``bucketed_ok_<old>_li``/``_o`` and the CBO stats tables
+    ``cbo_<old>_*`` — and leaves the corpus files they read in place."""
+    from ai_etl_studio_spark import layout_cache
+    from ai_etl_studio_spark.operators import extended
+    from ai_etl_studio_spark.operators.analytics import ensure_pagerank_edge_index
+
+    monkeypatch.setattr(layout_cache, "CACHE_ROOT", str(tmp_path / "cache"))
+    sf = _corpus_copy(tmp_path)
+
+    def ensure_all() -> list[str]:
+        return [
+            ensure_pagerank_edge_index(spark, sf),
+            *extended.ensure_bucketed_orderkey_tables(spark, sf),
+            *extended.ensure_column_stats(spark, sf).values(),
+        ]
+
+    registered: list[str] = []
+    try:
+        old = ensure_all()
+        registered += old
+        _keep_first_third(os.path.join(sf, "lineitem.parquet"))
+        new = ensure_all()
+        registered += new
+        assert not set(old) & set(new)
+        assert [n for n in new if not spark.catalog.tableExists(n)] == []
+        assert [n for n in old if spark.catalog.tableExists(n)] == []
+        for t in ("lineitem", "part", "supplier"):
+            assert os.path.exists(os.path.join(sf, f"{t}.parquet"))
+    finally:
+        for n in registered:
+            spark.sql(f"DROP TABLE IF EXISTS {n}")
+        extended._CBO_TABLES.pop(os.path.abspath(sf), None)

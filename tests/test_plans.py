@@ -262,7 +262,7 @@ class TestBucketing:
         """Compaction must cut the file count to ceil(bytes/target) and
         preserve every row."""
         from ai_etl_studio_spark.catalog import load_table
-        from ai_etl_studio_spark.sources.writers import compact_parquet
+        from ai_etl_studio_spark.sources.maintenance import compact_parquet
 
         src = str(tmp_path / "fragmented")
         dst = str(tmp_path / "compacted")
@@ -270,7 +270,7 @@ class TestBucketing:
         events.repartition(40).write.parquet(src)
         n_in = len(spark.read.parquet(src).inputFiles())
         assert n_in >= 40
-        compact_parquet(spark, src, dst, target_file_mb=128)
+        compact_parquet(spark, src, dst, target_mb=128)
         n_out = len(spark.read.parquet(dst).inputFiles())
         assert n_out < n_in
         assert n_out <= 2  # sf0.001 events ≪ 128 MB -> 1 file (+_SUCCESS aside)

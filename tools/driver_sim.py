@@ -126,43 +126,15 @@ def main() -> int:
                 merged = json.load(fh)
             merged.update(records)
             records = merged
+        # Seal-sync (r8 verdict item 1): a write to
+        # CORRECTNESS_full_latest.json goes through bench.seal_targets,
+        # the rule bench.py and tools/plan_snapshot.py write through.
         outputs = [out]
-        # Seal-sync (r8 verdict item 1): the r8 versioned snapshot lagged
-        # `latest` by one op because a post-seal restricted sweep updated
-        # only `latest`. When the CURRENT round's seal exists, every
-        # write to `latest` mirrors into it so the two cannot diverge.
         if os.path.basename(out) == "CORRECTNESS_full_latest.json":
-            repo = os.path.dirname(os.path.abspath(out)) or "."
-            import re as _re
-            env_round = os.environ.get("SPARK_GRAFT_ROUND")
-            if env_round and env_round.isdigit():
-                n = int(env_round)
-            else:
-                rounds = [
-                    int(m.group(1))
-                    for f in os.listdir(repo)
-                    if (m := _re.match(r"BENCH_r(\d+)\.json$", f))
-                ]
-                n = max(rounds, default=0) + 1
-            seal = os.path.join(repo, f"CORRECTNESS_full_r{n:02d}.json")
-            if os.path.exists(seal):
-                outputs.append(seal)
-            elif not env_round and os.path.exists(
-                os.path.join(repo, f"CORRECTNESS_full_r{n - 1:02d}.json")
-            ):
-                # r9 ADVICE: a POST-seal sweep (driver already wrote
-                # BENCH_r{N}) infers N+1 and would silently skip
-                # mirroring, diverging latest from the round-N seal.
-                # Guessing N here would be worse — an early-next-round
-                # sweep looks identical on disk and must NOT rewrite
-                # the historical seal — so fail loud instead: the
-                # operator states which round this sweep belongs to.
-                sys.stderr.write(
-                    f"driver_sim: no CORRECTNESS_full_r{n:02d}.json; if "
-                    f"this sweep belongs to the just-sealed round "
-                    f"{n - 1}, rerun with SPARK_GRAFT_ROUND={n - 1} to "
-                    "mirror into its seal (writing only latest now)\n"
-                )
+            import bench
+
+            repo = os.path.dirname(os.path.abspath(out))
+            outputs = bench.seal_targets(repo, "CORRECTNESS_full", not only)
         for path in outputs:
             with open(path, "w") as fh:
                 json.dump(records, fh, indent=1, sort_keys=True)

@@ -24,7 +24,7 @@ def main() -> None:
     top_n = int(sys.argv[2]) if len(sys.argv) > 2 else 25
 
     from ai_etl_studio_spark.operators import load_all
-    from ai_etl_studio_spark.plans.guard import explain_str
+    from ai_etl_studio_spark.plans.snapshot import plan_profile
     from ai_etl_studio_spark.session import get_spark
 
     spark = get_spark(app_name="plan-census", shuffle_partitions=8)
@@ -33,9 +33,8 @@ def main() -> None:
     rows = []
     for name, fn in queries.items():
         try:
-            t = explain_str(fn(spark, sf_dir), "formatted").split("\n\n")[0]
-            wide = t.count("Exchange") - t.count("BroadcastExchange")
-            rows.append((name, wide, t.count("Scan parquet")))
+            p = plan_profile(fn(spark, sf_dir))
+            rows.append((name, p["wide_exchanges"], p["parquet_scans"]))
         except Exception as exc:  # noqa: BLE001 — census must finish
             print(f"{name}: ERROR {type(exc).__name__}: {exc}")
     rows.sort(key=lambda r: -(r[1] + r[2]))

@@ -9,10 +9,11 @@ Usage:
   python tools/plan_snapshot.py                 # full sweep -> latest
   python tools/plan_snapshot.py --only n1 n2    # restricted merge
 
-Writes PLANSNAP_latest.json and mirrors into PLANSNAP_r{N}.json when
-that seal exists (same seal-sync discipline as tools/driver_sim.py:
-SPARK_GRAFT_ROUND pins N; an unset round never rewrites a historical
-seal). tests/test_plansnap.py gates on the artifact: keys must equal
+Writes PLANSNAP_latest.json and the round seal PLANSNAP_r{N}.json
+through ``bench.seal_targets``, the rule bench.py and
+tools/driver_sim.py write through: a full sweep writes both, a
+restricted one mirrors into the seal only when it exists.
+tests/test_plansnap.py gates on the artifact: keys must equal
 HEADLINE exactly, and a sentinel subset is recomputed live — so a plan
 profile cannot change without the changing commit regenerating the
 snapshot, which is what makes bench moves attributable.
@@ -22,7 +23,6 @@ from __future__ import annotations
 
 import json
 import os
-import re
 import sys
 from pathlib import Path
 
@@ -80,20 +80,9 @@ def main() -> int:
     else:
         payload = {"sf_dir": sf_dir, "profiles": profiles}
 
-    outputs = [latest]
-    env_round = os.environ.get("SPARK_GRAFT_ROUND")
-    if env_round and env_round.isdigit():
-        n = int(env_round)
-    else:
-        rounds = [
-            int(m.group(1))
-            for f in os.listdir(REPO)
-            if (m := re.match(r"BENCH_r(\d+)\.json$", f.name if hasattr(f, "name") else f))
-        ]
-        n = max(rounds, default=0) + 1
-    seal = REPO / f"PLANSNAP_r{n:02d}.json"
-    if env_round or seal.exists():
-        outputs.append(seal)
+    outputs = [
+        Path(p) for p in bench.seal_targets(str(REPO), "PLANSNAP", not only)
+    ]
     text = json.dumps(payload, indent=1, sort_keys=True) + "\n"
     for path in outputs:
         path.write_text(text)

@@ -1,13 +1,14 @@
 """Per-query profiler, timed the way bench.py times the registry.
 
-Times named queries exactly like bench.py (noop sink, same session
-factory, warmup pass at sf0.001, copurchase graph memo cleared before
-every timed run), and additionally records per-query job/stage/task
-counts from the status tracker plus, with --plans-dir, the formatted
-plan. --conf overlays Spark confs on the session, for A/B runs of a
-config change: run once without it for the baseline, then once per
-overlay, in separate processes (static confs like spark.driver.memory
-need a fresh JVM).
+Times named queries with bench.py's own warm-up (``bench.warm_up``:
+parquet footers, the build-once layouts, a pass at sf0.001) and timing
+loop (``bench.time_queries``: noop sink, copurchase graph memo cleared
+before every run), and additionally records per-query job/stage/task
+counts from the status tracker, by a job group per query, plus, with
+--plans-dir, the formatted plan. --conf overlays Spark confs on the
+session, for A/B runs of a config change: run once without it for the
+baseline, then once per overlay, in separate processes (static confs
+like spark.driver.memory need a fresh JVM).
 
 Usage:
   python tools/query_profile.py [--n N] [--plans-dir DIR] [--conf JSON] name [name ...]
@@ -26,7 +27,6 @@ import json
 import os
 import statistics
 import sys
-import time
 
 
 def main() -> None:
@@ -50,49 +50,30 @@ def main() -> None:
         ]
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    from ai_etl_studio_spark.catalog import load_table
-    from ai_etl_studio_spark.session import get_spark
+    import bench
     from ai_etl_studio_spark.operators import load_all
-    from ai_etl_studio_spark.operators.insights import _CP_GRAPH_CACHE
     from ai_etl_studio_spark.plans.guard import explain_str
+    from ai_etl_studio_spark.session import get_spark
 
     spark = get_spark(app_name="profile", extra_conf=args.conf)
     queries, _ = load_all()
     sc = spark.sparkContext
     tracker = sc.statusTracker()
-
-    # same warm protocol as bench.py, plus one read of the biggest table
-    load_table(spark, sf_dir, "lineitem").count()
-    warm_dir = "/root/testdata/sf0.001"
-    for name in names:
-        try:
-            queries[name](spark, warm_dir).write.format("noop").mode(
-                "overwrite"
-            ).save()
-        except Exception:
-            pass
+    bench.warm_up(spark, sf_dir, names)
 
     out = {}
     for name in names:
-        fn = queries[name]
         if args.plans_dir:
             os.makedirs(args.plans_dir, exist_ok=True)
-            plan = explain_str(fn(spark, sf_dir), "formatted")
+            plan = explain_str(queries[name](spark, sf_dir), "formatted")
             with open(os.path.join(args.plans_dir, f"{name}.txt"), "w") as fh:
                 fh.write(plan)
-        secs = []
-        jobs0 = tracker.getJobIdsForGroup(None)
-        sc.setJobDescription(f"profile:{name}")
-        for _ in range(n):
-            _CP_GRAPH_CACHE.clear()  # bench.py parity: no cross-query memo
-            t0 = time.perf_counter()
-            fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-            secs.append(round(time.perf_counter() - t0, 3))
-        sc.setJobDescription(None)
-        jobs1 = tracker.getJobIdsForGroup(None)
-        new_jobs = [j for j in jobs1 if j not in jobs0]
+        group = f"profile:{name}"
+        sc.setJobGroup(group, group)
+        secs = bench.time_queries(spark, sf_dir, [name], n)[name]
+        jobs = tracker.getJobIdsForGroup(group)
         stages = tasks = 0
-        for j in new_jobs:
+        for j in jobs:
             info = tracker.getJobInfo(j)
             if info:
                 for s in info.stageIds:
@@ -102,9 +83,9 @@ def main() -> None:
                         tasks += si.numTasks
         rec = {
             "name": name,
-            "secs": secs,
+            "secs": [round(t, 3) for t in secs],
             "median": round(statistics.median(secs), 3),
-            "jobs": len(new_jobs) // max(1, n),
+            "jobs": len(jobs) // max(1, n),
             "stages": stages // max(1, n),
             "tasks": tasks // max(1, n),
         }
