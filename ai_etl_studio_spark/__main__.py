@@ -12,7 +12,7 @@ Commands inside the REPL::
 
     \\schema            typed schema browser (A18)
     \\sql SELECT ...    run raw SQL through sanitize + read-only gate
-    \\explain           formatted physical plan of the last result
+    \\explain           formatted physical plan of the last query
     \\csv PATH          write the last result as CSV
     \\q                 quit
     anything else      NL question -> generator -> sanitize -> run
@@ -50,9 +50,11 @@ def _show(df, n: int) -> None:
 
 
 def main(argv: list[str] | None = None) -> int:
+    from ai_etl_studio_spark.sqlgen.sanitize import RESULT_LIMIT
+
     p = argparse.ArgumentParser(prog="ai_etl_studio_spark")
     p.add_argument("--sf-dir", default=None, help="parquet table dir (TESTDATA.md)")
-    p.add_argument("--limit", type=int, default=100)
+    p.add_argument("--limit", type=int, default=RESULT_LIMIT)
     p.add_argument("--backend", choices=("template", "http"), default="template")
     p.add_argument("--url")
     p.add_argument("--model")
@@ -99,7 +101,9 @@ def main(argv: list[str] | None = None) -> int:
             else:
                 from ai_etl_studio_spark.plans.guard import explain_str
 
-                print(explain_str(last.df, "formatted"))
+                # last.df is the fetched rows; plan the SQL again
+                # (planning executes nothing) to show how it ran
+                print(explain_str(spark.sql(last.sql), "formatted"))
             continue
         if cmd == "\\csv":
             if not rest:

@@ -1,4 +1,4 @@
-"""The query lifecycle: sanitize -> validate -> execute -> bound -> present.
+"""The query lifecycle: sanitize -> validate -> fetch once -> present.
 
 This is the reference's end-to-end path (app.py:242-302 ->
 db_utils.py:158-182) with Catalyst replacing the remote RDBMS:
@@ -6,13 +6,21 @@ db_utils.py:158-182) with Catalyst replacing the remote RDBMS:
     NL text --(sqlgen.generator)--> raw LLM text
     raw text --(sqlgen.sanitize A6-A10)--> single read-only SELECT
     sql --(plans.guard)--> parsed-plan read-only check
-    sql --spark.sql--> DataFrame (parse/analyze/optimize/execute in-process)
-    df --limit bound (A9)--> df
-    df --duplicate-name rename (A12)--> presentation DataFrame
+    sql --spark.sql--> plan --duplicate-name rename (A12)--> plan
+    plan --bounded fetch (A9: .limit(default_limit), one job)--> rows
+    rows --> local relation (the answer; display and CSV read it)
 
-Errors never raise out of ``run_query``: they surface as the 1×1
-error relation, exactly like the reference (app.py:244,268;
-db_utils.py:180-182).
+The fetch is the one execution per answer, as the reference's single
+``pandas.read_sql`` (db_utils.py:165): the returned frame is a
+``LocalRelation`` of at most ``default_limit`` rows, so collecting it,
+showing it or exporting it starts no further Spark job and never
+re-runs the plan. It holds one answer's own rows and is never shared
+between queries.
+
+Errors never raise out of ``run_query``: parse, analysis and execution
+errors (ANSI ``DIVIDE_BY_ZERO``, ``CAST_INVALID_INPUT``, ...) alike
+surface as the 1×1 error relation, exactly like the reference
+(app.py:244,268; db_utils.py:180-182).
 """
 
 from __future__ import annotations
@@ -22,9 +30,15 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession
 
 from ai_etl_studio_spark.plans.guard import is_read_only_plan
-from ai_etl_studio_spark.sqlgen.sanitize import has_limit, is_read_only, sanitize
+from ai_etl_studio_spark.plans.snapshot import capture_stage
+from ai_etl_studio_spark.sqlgen.sanitize import (
+    RESULT_LIMIT,
+    has_limit,
+    is_read_only,
+    sanitize,
+)
 
-DEFAULT_LIMIT = 100  # prompts.py:131 / app.py:265
+DEFAULT_LIMIT = RESULT_LIMIT
 
 
 def error_relation(spark: SparkSession, message: str) -> DataFrame:
@@ -72,9 +86,12 @@ def run_query(
     """Execute one (possibly LLM-emitted) SELECT against the Spark catalog.
 
     Mirrors the reference's run path but in-process: the RDBMS round-trip
-    (db_utils.py:160-165) becomes ``spark.sql``. The result is LIMIT-bounded
-    (string-injected when missing, so Catalyst plans CollectLimit /
-    TakeOrderedAndProject rather than a full materialization).
+    (db_utils.py:160-165) becomes ``spark.sql`` plus one bounded fetch.
+    ``sanitize`` appends a LIMIT to SQL text without one, and the fetch
+    cuts the plan to ``default_limit`` rows whatever the text says (a
+    LIMIT inside a subquery or a string literal satisfies the textual
+    check), so the driver holds at most ``default_limit`` rows.
+    ``QueryResult.df`` is those rows as a local relation (see ``fetch``).
     """
     if sanitize_input:
         s = sanitize(raw_text, default_limit)
@@ -83,17 +100,26 @@ def run_query(
         sql = s.sql
     else:
         sql = raw_text
-        if not has_limit(sql):
-            sql = f"{sql.rstrip()} LIMIT {int(default_limit)}"
 
     try:
         if not is_read_only_plan(spark, sql):
             return QueryResult(None, sql, False, "only SELECT queries are allowed")
-        df = spark.sql(sql)
-    except Exception as exc:  # Parse/AnalysisException -> error relation
+        df = fetch(spark, dedupe_column_names(spark.sql(sql)), default_limit)
+    except Exception as exc:  # parse, analysis or execution error -> error relation
         return QueryResult(None, sql, False, f"{type(exc).__name__}: {exc}")
 
-    return QueryResult(dedupe_column_names(df), sql, True, None)
+    return QueryResult(df, sql, True, None)
+
+
+def fetch(spark: SparkSession, df: DataFrame, limit: int) -> DataFrame:
+    """Run ``df`` cut to ``limit`` rows once, in the JVM, and return the
+    rows as a driver-local relation (``LocalRelation``) with ``df``'s
+    schema. Rows stay JVM objects end to end, so types round-trip
+    exactly; an execution error raises here, inside the caller's
+    ``try``, not at a later action."""
+    jdf = capture_stage(df.limit(limit))._jdf
+    local = spark._jsparkSession.createDataFrame(jdf.collectAsList(), jdf.schema())
+    return DataFrame(local, spark)
 
 
 def run_parameterized(
@@ -121,8 +147,12 @@ def run_parameterized(
     TEMPLATE (parameter markers parse without values), so a DDL/DML
     template is rejected before any binding happens.
 
-    Errors surface as the error relation, never raise — the
-    ``run_query`` contract.
+    Unlike ``run_query`` the result stays lazy (builders compose it
+    into larger plans, and its parquet pushdown is pinned in
+    test_plans), so only analysis-time errors (parse, unbound or
+    mistyped parameters, unknown columns) become the error relation
+    here. An execution-time error (ANSI ``DIVIDE_BY_ZERO``, a bad cast)
+    surfaces at the caller's first action.
     """
     try:
         # guard the RAW template first (a DDL template must be rejected

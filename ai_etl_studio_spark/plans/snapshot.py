@@ -121,6 +121,10 @@ STAGE_SOURCED = frozenset(
         # stages are capture_stage-sourced like bradley_terry's.
         "markov_absorption_k_step",
         "markov_removal_effects",
+        # the NL path: engine.run_query fetches the bounded answer
+        # during construction and returns it as a LocalTableScan; the
+        # fetched plan is its one stage frame.
+        "nl2sql_end_to_end",
     }
 )
 

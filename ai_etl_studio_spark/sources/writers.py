@@ -5,7 +5,10 @@ button (app.py:301-302) — a driver-side materialization bounded by the
 injected LIMIT. Both forms exist here:
 
 - ``to_csv_bytes``: the interactive path — bounded, driver-side,
-  byte-for-byte what the reference's download produced.
+  byte-for-byte what the reference's download produced. It is built
+  from the answer ``engine.run_query`` already fetched (a local
+  relation of at most ``DOWNLOAD_LIMIT`` rows), so the export reads
+  those rows and does not run the query again.
 - ``write_csv`` / ``write_parquet``: the engine path — distributed
   writes, no driver bottleneck.
 """
@@ -14,8 +17,10 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 
-#: Interactive-path bound (mirrors prompts.py:131 / app.py:265).
-DOWNLOAD_LIMIT = 100
+from ai_etl_studio_spark.sqlgen.sanitize import RESULT_LIMIT
+
+#: Interactive-path bound: the same row bound as the fetched answer.
+DOWNLOAD_LIMIT = RESULT_LIMIT
 
 
 def to_csv_bytes(df: DataFrame, limit: int = DOWNLOAD_LIMIT) -> bytes:

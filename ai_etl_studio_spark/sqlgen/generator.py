@@ -24,6 +24,7 @@ from collections.abc import Callable
 from dataclasses import dataclass
 
 from ai_etl_studio_spark.sqlgen.prompts import get_system_prompt
+from ai_etl_studio_spark.sqlgen.sanitize import RESULT_LIMIT
 
 
 class GenerationError(Exception):
@@ -37,7 +38,7 @@ class TemplateGenerator:
     GenerationError when no template applies (caller surfaces the error
     relation, mirroring app.py:267-268)."""
 
-    limit: int = 100
+    limit: int = RESULT_LIMIT
 
     _RULES = [
         (
@@ -264,13 +265,13 @@ class LLMGenerator:
 
     complete: Callable[[str, str], str]
     schema_desc: str
-    limit: int = 100
+    limit: int = RESULT_LIMIT
 
     def generate(self, question: str) -> str:
         return self.complete(get_system_prompt(self.schema_desc, self.limit), question)
 
 
-def generate_and_run(spark, generator, question: str, default_limit: int = 100):
+def generate_and_run(spark, generator, question: str, default_limit: int = RESULT_LIMIT):
     """Full reference pipeline: generate -> sanitize -> validate -> run
     (app.py:288-302), errors surfacing as the error relation."""
     from ai_etl_studio_spark.engine import QueryResult, run_query

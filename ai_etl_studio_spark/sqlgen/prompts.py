@@ -24,6 +24,8 @@ deleted (5.7-era downgrades that Spark makes obsolete):
 
 from __future__ import annotations
 
+from ai_etl_studio_spark.sqlgen.sanitize import RESULT_LIMIT
+
 SPARK_SQL_RULES = """You are a Spark SQL expert. Build ONE valid Spark SQL SELECT query for the user's question.
 
 STRICT RULES:
@@ -48,7 +50,7 @@ SCHEMA:
 """
 
 
-def get_system_prompt(schema_desc: str, limit: int = 100) -> str:
+def get_system_prompt(schema_desc: str, limit: int = RESULT_LIMIT) -> str:
     """Render the system prompt (analogue of reference get_system_prompt,
     prompts.py:1-132, minus the deleted blocks)."""
     return SPARK_SQL_RULES.format(schema=schema_desc, limit=limit)

@@ -19,6 +19,12 @@ from __future__ import annotations
 import re
 from dataclasses import dataclass
 
+#: The one bound on an interactive answer's rows: the LIMIT injected
+#: into SQL without one, the plan cut of ``engine.run_query``'s fetch,
+#: the CSV download and the LIMIT the system prompt asks the model for
+#: (the reference's PostgreSQL-mode default, prompts.py:131 / app.py:265).
+RESULT_LIMIT = 100
+
 _FENCED_SQL = re.compile(r"```sql\s*(.*?)\s*```", re.DOTALL | re.IGNORECASE)
 _FENCED_ANY = re.compile(r"```\s*(.*?)\s*```", re.DOTALL)
 #: WITH must look like a real CTE (`WITH name AS (`) — a bare "with" in
@@ -66,9 +72,8 @@ def has_limit(sql: str) -> bool:
     return bool(_HAS_LIMIT.search(sql))
 
 
-def inject_limit(sql: str, n: int = 100) -> str:
-    """Append `LIMIT n` when absent (app.py:265; default mirrors the
-    PostgreSQL-mode bound, prompts.py:131)."""
+def inject_limit(sql: str, n: int = RESULT_LIMIT) -> str:
+    """Append `LIMIT n` when absent (app.py:265)."""
     return sql if has_limit(sql) else f"{sql.rstrip()} LIMIT {int(n)}"
 
 
@@ -93,7 +98,7 @@ class SanitizedSQL:
     error: str | None = None
 
 
-def sanitize(text: str, default_limit: int = 100) -> SanitizedSQL:
+def sanitize(text: str, default_limit: int = RESULT_LIMIT) -> SanitizedSQL:
     """Full A6-A10 pipeline. On unrecoverable input returns ok=False with
     an error message — the caller surfaces it as the error relation."""
     sql = extract_sql(text)

@@ -6,7 +6,7 @@ from __future__ import annotations
 import pytest
 
 from ai_etl_studio_spark.catalog import register_tables
-from ai_etl_studio_spark.engine import dedupe_column_names, run_query
+from ai_etl_studio_spark.engine import DEFAULT_LIMIT, dedupe_column_names, run_query
 from tests.conftest import SF_DIR
 
 
@@ -70,6 +70,111 @@ class TestRunQuery:
         r = run_query(spark, "SELECT c_custkey FROM customer LIMIT 7")
         assert r.ok and r.df.count() == 7
         assert r.sql.count("LIMIT") == 1
+
+
+#: one question for each TemplateGenerator rule, in rule order
+TEMPLATE_QUESTIONS = (
+    "top 10 products by revenue",
+    "revenue per nation",
+    "top 3 customers per nation",
+    "orders count per priority",
+    "customers in segment BUILDING",
+    "find duplicate documents",
+    "top 7 tokens",
+    "documents per language",
+    "show retention by first-order month",
+    "show me the conversion funnel",
+    "documents per shard",
+    "which boilerplate lines repeat across documents",
+    "show the a/b test result",
+    "check referential integrity",
+    "show event transitions",
+    "classify demand by part type",
+    "how bursty are the events?",
+)
+
+
+class TestOneExecution:
+    """run_query fetches the bounded answer once; the returned frame is
+    those rows, so display and export never re-run the plan, and an
+    execution-time error is the error relation like a parse error."""
+
+    @pytest.mark.parametrize(
+        "sql, error_class",
+        [
+            ("SELECT 1/0", "DIVIDE_BY_ZERO"),
+            ("SELECT CAST('abc' AS INT)", "CAST_INVALID_INPUT"),
+        ],
+    )
+    def test_runtime_error_is_error_relation(self, spark, sql, error_class):
+        r = run_query(spark, sql)
+        assert not r.ok and r.df is None
+        assert error_class in r.error
+        out = r.presentation(spark)
+        assert out.columns == ["error_message"]
+        rows = out.collect()
+        assert len(rows) == 1 and error_class in rows[0].error_message
+
+    def test_limit_word_in_literal_still_bounds_the_answer(self, spark):
+        # the textual LIMIT check sees 'no limit' and injects nothing;
+        # the fetch cuts the plan anyway
+        r = run_query(spark, "SELECT l_orderkey, 'no limit' AS note FROM lineitem")
+        assert r.ok and r.sql.count("LIMIT") == 0
+        assert spark.table("lineitem").count() > DEFAULT_LIMIT
+        assert len(r.df.collect()) == DEFAULT_LIMIT
+
+    def test_answer_is_local_rows(self, spark):
+        from tests.test_catalog import _jobs_in
+
+        r = run_query(spark, "SELECT c_custkey, c_name FROM customer ORDER BY c_custkey")
+        assert r.ok
+        rows = []
+        assert _jobs_in(spark, lambda: rows.extend(r.df.collect())) == 0
+        assert len(rows) == DEFAULT_LIMIT
+        plan = r.df._jdf.queryExecution().executedPlan().toString()
+        assert "LocalTableScan" in plan
+        assert "parquet" not in plan.lower()
+
+    def test_csv_of_answer_equals_csv_of_plan(self, spark):
+        """Every template's answer is local rows, and its CSV is
+        byte-identical to the CSV of its lazy plan: the round trip
+        through the local relation keeps every type and value."""
+        import re
+
+        from ai_etl_studio_spark.sources.writers import to_csv_bytes
+        from ai_etl_studio_spark.sqlgen.generator import TemplateGenerator
+
+        rules = [p for p, _ in TemplateGenerator._RULES]
+        hit = {
+            next(i for i, p in enumerate(rules) if re.search(p, q.lower()))
+            for q in TEMPLATE_QUESTIONS
+        }
+        assert hit == set(range(len(rules)))  # one question per template
+        g = TemplateGenerator()
+        for q in TEMPLATE_QUESTIONS:
+            r = run_query(spark, g.generate(q))
+            assert r.ok, (q, r.error)
+            assert "LocalTableScan" in r.df._jdf.queryExecution().executedPlan().toString(), q
+            lazy = dedupe_column_names(spark.sql(r.sql))
+            assert to_csv_bytes(r.df) == to_csv_bytes(lazy), q
+
+
+def test_repl_survives_runtime_error_and_explains_the_plan(spark, monkeypatch, capsys):
+    """A runtime error in one answer is shown as the error relation and
+    the REPL goes on; \\explain plans the last SQL, not its rows."""
+    import builtins
+
+    from ai_etl_studio_spark import __main__ as cli
+    from ai_etl_studio_spark import session
+
+    lines = iter(["\\sql SELECT 1/0", "revenue per nation", "\\explain", "\\q"])
+    monkeypatch.setattr(builtins, "input", lambda prompt="": next(lines))
+    monkeypatch.setattr(session, "get_spark", lambda **kw: spark)
+    assert cli.main(["--sf-dir", SF_DIR]) == 0
+    out = capsys.readouterr().out
+    assert "error_message" in out and "DIVIDE_BY_ZERO" in out
+    explain = out[out.index("== Physical Plan =="):]
+    assert "Scan parquet" in explain and "LocalTableScan" not in explain
 
 
 class TestDedupeColumns:
