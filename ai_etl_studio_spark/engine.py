@@ -13,14 +13,16 @@ db_utils.py:158-182) with Catalyst replacing the remote RDBMS:
 The fetch is the one execution per answer, as the reference's single
 ``pandas.read_sql`` (db_utils.py:165): the returned frame is a
 ``LocalRelation`` of at most ``default_limit`` rows, so collecting it,
-showing it or exporting it starts no further Spark job and never
-re-runs the plan. It holds one answer's own rows and is never shared
-between queries.
+showing it or exporting it (``writers.to_csv_bytes``) starts no further
+Spark job, needs no Python worker and never re-runs the plan. It holds
+one answer's own rows and is never shared between queries.
 
 Errors never raise out of ``run_query``: parse, analysis and execution
 errors (ANSI ``DIVIDE_BY_ZERO``, ``CAST_INVALID_INPUT``, ...) alike
 surface as the 1×1 error relation, exactly like the reference
-(app.py:244,268; db_utils.py:180-182).
+(app.py:244,268; db_utils.py:180-182). The error relation is a
+``LocalRelation`` too, so a refusal's display and CSV start no Spark
+job and no Python worker either.
 """
 
 from __future__ import annotations
@@ -42,8 +44,16 @@ DEFAULT_LIMIT = RESULT_LIMIT
 
 
 def error_relation(spark: SparkSession, message: str) -> DataFrame:
-    """`SELECT '<msg>' AS error_message LIMIT 100` (app.py:244,268)."""
-    return spark.createDataFrame([(str(message),)], "error_message string").limit(DEFAULT_LIMIT)
+    """`SELECT '<msg>' AS error_message LIMIT 100` (app.py:244,268).
+
+    Inline ``VALUES`` with the message bound as a parameter, so any text
+    (quotes, newlines, ``:name`` markers) is one literal and the plan
+    optimizes to a JVM-side ``LocalRelation``: collecting it or exporting
+    it as CSV starts no Spark job and needs no Python worker."""
+    return spark.sql(
+        f"SELECT * FROM VALUES (:m) AS t(error_message) LIMIT {DEFAULT_LIMIT}",
+        args={"m": str(message)},
+    )
 
 
 def dedupe_column_names(df: DataFrame) -> DataFrame:

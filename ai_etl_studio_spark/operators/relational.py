@@ -26,6 +26,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ai_etl_studio_spark import engine
 from ai_etl_studio_spark.catalog import load_table
 from ai_etl_studio_spark.functions.exact import (
     SQL_NET_CENTS,
@@ -676,7 +677,7 @@ def scalar_conditional(spark: SparkSession, sf_dir: str) -> DataFrame:
 def error_relation(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Error-as-relation: failures surface as a 1×1 constant relation
     (app.py:244,268 — `SELECT '<msg>' AS error_message LIMIT 100`)."""
-    return spark.createDataFrame([("Schema unavailable",)], "error_message string").limit(100)
+    return engine.error_relation(spark, "Schema unavailable")
 
 
 @register(

@@ -137,12 +137,15 @@ class TestOneExecution:
 
     def test_csv_of_answer_equals_csv_of_plan(self, spark):
         """Every template's answer is local rows, and its CSV is
-        byte-identical to the CSV of its lazy plan: the round trip
-        through the local relation keeps every type and value."""
+        byte-identical to the CSV of its lazy plan under the old
+        ``toPandas`` definition: the round trip through the local
+        relation keeps every type and value, and the export starts no
+        job."""
         import re
 
         from ai_etl_studio_spark.sources.writers import to_csv_bytes
         from ai_etl_studio_spark.sqlgen.generator import TemplateGenerator
+        from tests.test_catalog import _jobs_in
 
         rules = [p for p, _ in TemplateGenerator._RULES]
         hit = {
@@ -156,7 +159,166 @@ class TestOneExecution:
             assert r.ok, (q, r.error)
             assert "LocalTableScan" in r.df._jdf.queryExecution().executedPlan().toString(), q
             lazy = dedupe_column_names(spark.sql(r.sql))
-            assert to_csv_bytes(r.df) == to_csv_bytes(lazy), q
+            csv = []
+            assert _jobs_in(spark, lambda: csv.append(to_csv_bytes(r.df))) == 0, q
+            assert csv[0] == old_csv_bytes(lazy) == to_csv_bytes(lazy), q
+
+
+def old_csv_bytes(df, limit: int = DEFAULT_LIMIT) -> bytes:
+    """The CSV export as ``toPandas`` defines it (one Arrow job)."""
+    return df.limit(limit).toPandas().to_csv(index=False).encode("utf-8")
+
+
+#: one refusal of each kind: (raw text, sanitize_input)
+REFUSALS = {
+    "sanitize": ("DROP TABLE lineitem", True),
+    "plan_guard": ("CREATE TABLE pwned AS SELECT 1 AS x", False),
+    "analysis": ("SELECT not_a_column FROM customer", True),
+    "ansi_runtime": ("SELECT 1/0", True),
+}
+
+#: an error text that is hostile to SQL text, parameter markers,
+#: variable substitution, CSV quoting and encodings
+HOSTILE_MESSAGE = "it's \"quoted\"\nnext line :m ? ${x} -- not a comment, héllo ✓ 漢字"
+
+
+class TestJobFreeDelivery:
+    """A refusal is the error relation, a LocalRelation like a fetched
+    answer: display and CSV export start no Spark job."""
+
+    @pytest.mark.parametrize("kind", sorted(REFUSALS))
+    def test_refusal_starts_no_job(self, spark, kind):
+        from ai_etl_studio_spark.sources.writers import to_csv_bytes
+        from tests.test_catalog import _jobs_in
+
+        raw, sanitize_input = REFUSALS[kind]
+        r = run_query(spark, raw, sanitize_input=sanitize_input)
+        assert not r.ok and r.df is None, kind
+        out = r.presentation(spark)
+        assert "LocalTableScan" in out._jdf.queryExecution().executedPlan().toString()
+        rows, csv = [], []
+        assert _jobs_in(spark, lambda: rows.extend(out.collect())) == 0
+        assert _jobs_in(spark, lambda: csv.append(to_csv_bytes(out))) == 0
+        assert [row.error_message for row in rows] == [r.error]
+        assert csv[0] == old_csv_bytes(out)
+
+    def test_message_round_trips_byte_exact(self, spark):
+        import pandas as pd
+
+        from ai_etl_studio_spark.engine import QueryResult, error_relation
+        from ai_etl_studio_spark.sources.writers import to_csv_bytes
+        from tests.test_catalog import _jobs_in
+
+        want_csv = pd.DataFrame({"error_message": [HOSTILE_MESSAGE]}).to_csv(index=False)
+        for out in (
+            error_relation(spark, HOSTILE_MESSAGE),
+            QueryResult(None, "", False, HOSTILE_MESSAGE).presentation(spark),
+        ):
+            rows, csv = [], []
+            assert _jobs_in(spark, lambda: rows.extend(out.collect())) == 0
+            assert _jobs_in(spark, lambda: csv.append(to_csv_bytes(out))) == 0
+            assert [tuple(row) for row in rows] == [(HOSTILE_MESSAGE,)]
+            assert csv[0] == want_csv.encode("utf-8")
+
+
+#: an 18-type matrix over every value kind an answer can hold
+CSV_CASES = {
+    "nullable_int": "SELECT * FROM VALUES (1), (CAST(NULL AS INT)), (3) AS t(x)",
+    "bigint_bool": "SELECT id AS k, id % 2 = 0 AS even FROM range(5)",
+    "small_ints": "SELECT CAST(1 AS TINYINT) AS b, CAST(NULL AS SMALLINT) AS s",
+    "decimal": "SELECT CAST(x AS DECIMAL(18,4)) AS d"
+    " FROM VALUES (1.5), (NULL), (-12345.6789) AS t(x)",
+    "float": "SELECT CAST(x AS DOUBLE) AS f, CAST(x AS FLOAT) AS r"
+    " FROM VALUES (0.1), (1e300), (-2.5), (NULL) AS t(x)",
+    "nan_inf": "SELECT * FROM VALUES (CAST('NaN' AS DOUBLE)),"
+    " (CAST('Infinity' AS DOUBLE)), (CAST('-Infinity' AS DOUBLE)) AS t(x)",
+    "date": "SELECT * FROM VALUES (DATE'2024-02-29'), (DATE'1900-01-01'), (NULL) AS t(d)",
+    "timestamp": "SELECT * FROM VALUES (TIMESTAMP'2024-03-10 02:30:00'),"
+    " (TIMESTAMP'2024-11-03 01:30:00.123456'), (TIMESTAMP'1969-12-31 23:59:59'),"
+    " (NULL) AS t(ts)",
+    "timestamp_ntz": "SELECT * FROM VALUES (TIMESTAMP_NTZ'2024-03-10 02:30:00'),"
+    " (TIMESTAMP_NTZ'2024-11-03 01:30:00.5'), (NULL) AS t(ts)",
+    "array": "SELECT * FROM VALUES (array(1, 2, 3)), (array()), (NULL), (array(1, NULL)) AS t(a)",
+    "map": "SELECT * FROM VALUES (map('a', 1, 'b', 2)), (NULL), (map()) AS t(m)",
+    "struct": "SELECT named_struct('a', 1, 'b', 'x', 'c', TIMESTAMP'2024-01-01 12:00:00') AS s"
+    " UNION ALL SELECT NULL",
+    "nested": "SELECT array(named_struct('k', 1, 'v', 1.5D), named_struct('k', 2, 'v', NULL)) AS a,"
+    " array(TIMESTAMP'2024-01-01 00:00:00', NULL) AS ts",
+    "binary": "SELECT * FROM VALUES (X'00FF10'), (CAST('héllo' AS BINARY)), (NULL) AS t(b)",
+    "interval": "SELECT * FROM VALUES (INTERVAL '1 02:03:04.5' DAY TO SECOND), (NULL) AS t(i)",
+    "empty": "SELECT id, CAST(id AS STRING) AS s FROM range(0)",
+    "duplicate_names": "SELECT 1 AS a, 'x' AS a, 2.5D AS a",
+    "text": "SELECT * FROM VALUES ('it''s \"q\"'), ('line1\nline2'), ('héllo ✓ 漢字'),"
+    " (''), (NULL), ('a,b') AS t(s)",
+}
+
+
+def csv_mismatches(spark) -> list[str]:
+    """Matrix cases whose CSV from the fetched answer differs from the
+    ``toPandas`` CSV of the lazy plan, or whose export starts a job."""
+    from ai_etl_studio_spark.engine import fetch
+    from ai_etl_studio_spark.sources.writers import to_csv_bytes
+    from tests.test_catalog import _jobs_in
+
+    bad = []
+    for name, sql in CSV_CASES.items():
+        lazy = spark.sql(sql)
+        local = fetch(spark, lazy, DEFAULT_LIMIT)
+        csv = []
+        if _jobs_in(spark, lambda: csv.append(to_csv_bytes(local))) != 0:
+            bad.append(f"{name}: started a job")
+        elif csv[0] != old_csv_bytes(lazy):
+            bad.append(f"{name}: {csv[0]!r} != {old_csv_bytes(lazy)!r}")
+    return bad
+
+
+def test_csv_matches_topandas_over_type_matrix(spark):
+    assert csv_mismatches(spark) == []
+
+
+_TZ_MATRIX = """
+import json, sys
+sys.path[:0] = [{repo!r}]
+from ai_etl_studio_spark.session import get_spark
+from tests.test_engine import csv_mismatches
+
+spark = get_spark(app_name="csv-tz")
+bad = []
+for tz in ("UTC", "Asia/Kathmandu"):
+    spark.conf.set("spark.sql.session.timeZone", tz)
+    bad += [f"{{tz}} {{b}}" for b in csv_mismatches(spark)]
+spark.stop()
+print(json.dumps(bad))
+"""
+
+
+def test_csv_matches_topandas_in_non_utc_process():
+    """The same matrix with the Python process (and its JVM) in a
+    DST-observing zone, under a UTC and a non-UTC session zone:
+    ``collect()`` hands back local-time datetimes, so this is where a
+    time-zone slip in the conversion would show."""
+    import json
+    import os
+    import subprocess
+    import sys
+    from pathlib import Path
+
+    repo = Path(__file__).resolve().parents[1]
+    env = dict(
+        os.environ,
+        TZ="America/New_York",
+        SPARK_GRAFT_CPUS="2",
+        SPARK_GRAFT_DRIVER_MEM="1g",
+    )
+    out = subprocess.run(
+        [sys.executable, "-c", _TZ_MATRIX.format(repo=str(repo))],
+        capture_output=True,
+        text=True,
+        env=env,
+        timeout=300,
+    )
+    assert out.returncode == 0, out.stderr[-2000:]
+    assert json.loads(out.stdout.strip().splitlines()[-1]) == []
 
 
 def test_repl_survives_runtime_error_and_explains_the_plan(spark, monkeypatch, capsys):
