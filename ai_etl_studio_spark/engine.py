@@ -30,6 +30,14 @@ from __future__ import annotations
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
+from pyspark.sql.types import (
+    ArrayType,
+    DataType,
+    MapType,
+    StructType,
+    YearMonthIntervalType,
+)
 
 from ai_etl_studio_spark.plans.guard import is_read_only_plan
 from ai_etl_studio_spark.plans.snapshot import capture_stage
@@ -126,10 +134,37 @@ def fetch(spark: SparkSession, df: DataFrame, limit: int) -> DataFrame:
     rows as a driver-local relation (``LocalRelation``) with ``df``'s
     schema. Rows stay JVM objects end to end, so types round-trip
     exactly; an execution error raises here, inside the caller's
-    ``try``, not at a later action."""
+    ``try``, not at a later action.
+
+    One exception: pyspark cannot turn a year-month interval into a
+    Python value (``YearMonthIntervalType.fromInternal`` raises), so a
+    column whose type holds one, at any depth, is cast to its SQL
+    string in the JVM first (``INTERVAL '1-2' YEAR TO MONTH``, as
+    ``show()`` prints it); collecting or exporting the answer then
+    works like any other."""
+    fields = df.schema.fields
+    if any(_has_year_month(f.dataType) for f in fields):
+        # positional names, so duplicate output names stay addressable
+        cols = []
+        for i, f in enumerate(fields):
+            c = F.col(f"_{i}")
+            cols.append((c.cast("string") if _has_year_month(f.dataType) else c).alias(f.name))
+        df = df.toDF(*(f"_{i}" for i in range(len(fields)))).select(*cols)
     jdf = capture_stage(df.limit(limit))._jdf
     local = spark._jsparkSession.createDataFrame(jdf.collectAsList(), jdf.schema())
     return DataFrame(local, spark)
+
+
+def _has_year_month(dt: DataType) -> bool:
+    if isinstance(dt, YearMonthIntervalType):
+        return True
+    if isinstance(dt, StructType):
+        return any(_has_year_month(f.dataType) for f in dt.fields)
+    if isinstance(dt, ArrayType):
+        return _has_year_month(dt.elementType)
+    if isinstance(dt, MapType):
+        return _has_year_month(dt.keyType) or _has_year_month(dt.valueType)
+    return False
 
 
 def run_parameterized(
@@ -204,7 +239,6 @@ def observed_result(
     re-execute the whole plan once per metric at 100 TB.
     """
     from pyspark.sql import Observation
-    from pyspark.sql import functions as F
 
     ob = Observation(name)
     metrics = [F.count(F.lit(1)).alias("row_count")] + [

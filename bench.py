@@ -149,8 +149,15 @@ def warm_up(spark, sf_dir: str, names: list[str]) -> None:
     """Everything the timed region must not pay: parquet footers, the
     build-once layouts (so it measures serving from the persisted index,
     not the one-time build), and one pass of ``names`` at WARM_DIR so
-    codegen/JIT compilation (2-3x the steady-state cost on first run)
-    isn't attributed to the engine."""
+    the JVM's JIT is warm before timing.
+
+    Generated classes from that pass are reused only while the working
+    set fits Spark's codegen cache (1000 entries, ``session.get_spark``).
+    A short list does (``tools/query_profile.py`` on a few names reports
+    0 compiles per run). The whole HEADLINE does not: on 4 cores this
+    warm-up compiled 9663 classes, and the sf0.1 pass after it compiled
+    9558 more, in 704 of 705 queries, so a full bench row still pays its
+    own codegen compilation."""
     from ai_etl_studio_spark.catalog import load_table
     from ai_etl_studio_spark.operators.analytics import ensure_pagerank_edge_index
     from ai_etl_studio_spark.operators.dedup import (

@@ -629,3 +629,45 @@ def test_templates_reach_round10_surface(spark):
         ).collect()
     }
     assert fano.df.collect()[0]["fano_micro"] == op[3600]
+
+
+class TestYearMonthInterval:
+    """pyspark cannot convert a year-month interval to a Python value,
+    so ``fetch`` delivers such a column as its SQL string; day-time
+    intervals keep their ``toPandas`` CSV."""
+
+    @pytest.mark.parametrize(
+        "sql, rows, csv",
+        [
+            (
+                "SELECT INTERVAL '1-2' YEAR TO MONTH AS ym, 7 AS n",
+                [("INTERVAL '1-2' YEAR TO MONTH", 7)],
+                b"ym,n\nINTERVAL '1-2' YEAR TO MONTH,7\n",
+            ),
+            (
+                "SELECT named_struct('a', INTERVAL '1' YEAR, 'b', 2) AS s,"
+                " array(INTERVAL '3' MONTH, NULL) AS a, 1 AS s",
+                [("{INTERVAL '1' YEAR, 2}", "[INTERVAL '3' MONTH, null]", 1)],
+                b"s,a,s_1\n\"{INTERVAL '1' YEAR, 2}\",\"[INTERVAL '3' MONTH, null]\",1\n",
+            ),
+        ],
+        ids=["top_level", "nested"],
+    )
+    def test_answer_collects_and_exports(self, spark, sql, rows, csv):
+        from ai_etl_studio_spark.sources.writers import to_csv_bytes
+
+        r = run_query(spark, sql)
+        assert r.ok, r.error
+        assert [tuple(row) for row in r.df.collect()] == rows
+        assert to_csv_bytes(r.df) == csv
+
+    def test_day_time_interval_csv_unchanged(self, spark):
+        from ai_etl_studio_spark.sources.writers import to_csv_bytes
+
+        r = run_query(
+            spark,
+            "SELECT * FROM VALUES (INTERVAL '1 02:03:04.5' DAY TO SECOND, INTERVAL '3' HOUR),"
+            " (NULL, NULL) AS t(i, h)",
+        )
+        assert r.ok, r.error
+        assert to_csv_bytes(r.df) == b"i,h\n1 days 02:03:04.500000,0 days 03:00:00\n,\n"

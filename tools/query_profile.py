@@ -4,11 +4,14 @@ Times named queries with bench.py's own warm-up (``bench.warm_up``:
 parquet footers, the build-once layouts, a pass at sf0.001) and timing
 loop (``bench.time_queries``: noop sink, copurchase graph memo cleared
 before every run), and additionally records per-query job/stage/task
-counts from the status tracker, by a job group per query, plus, with
---plans-dir, the formatted plan. --conf overlays Spark confs on the
-session, for A/B runs of a config change: run once without it for the
-baseline, then once per overlay, in separate processes (static confs
-like spark.driver.memory need a fresh JVM).
+counts from the status tracker, by a job group per query, the codegen
+compilations per run (``compiles``: 0 when every generated class is
+served from Spark's codegen cache), plus, with --plans-dir, the
+formatted plan. --conf overlays Spark confs on the session, for A/B
+runs of a config change: run once without it for the baseline, then
+once per overlay, in separate processes (static confs like
+spark.driver.memory or spark.sql.codegen.cache.maxEntries need a fresh
+JVM).
 
 Usage:
   python tools/query_profile.py [--n N] [--plans-dir DIR] [--conf JSON] name [name ...]
@@ -16,7 +19,8 @@ Usage:
 
 Env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1), SPARK_GRAFT_CPUS.
 Prints one JSON line per query:
-  {"name": ..., "secs": [..], "median": s, "jobs": n, "stages": n, "tasks": n}
+  {"name": ..., "secs": [..], "median": s, "jobs": n, "stages": n, "tasks": n,
+   "compiles": c}
 then {"conf": {...}, "total_median": s}.
 """
 
@@ -53,7 +57,7 @@ def main() -> None:
     import bench
     from ai_etl_studio_spark.operators import load_all
     from ai_etl_studio_spark.plans.guard import explain_str
-    from ai_etl_studio_spark.session import get_spark
+    from ai_etl_studio_spark.session import codegen_compiles, get_spark
 
     spark = get_spark(app_name="profile", extra_conf=args.conf)
     queries, _ = load_all()
@@ -70,7 +74,9 @@ def main() -> None:
                 fh.write(plan)
         group = f"profile:{name}"
         sc.setJobGroup(group, group)
+        compiles_before = codegen_compiles(spark)
         secs = bench.time_queries(spark, sf_dir, [name], n)[name]
+        compiled = codegen_compiles(spark) - compiles_before
         jobs = tracker.getJobIdsForGroup(group)
         stages = tasks = 0
         for j in jobs:
@@ -88,6 +94,7 @@ def main() -> None:
             "jobs": len(jobs) // max(1, n),
             "stages": stages // max(1, n),
             "tasks": tasks // max(1, n),
+            "compiles": round(compiled / max(1, n), 1),
         }
         out[name] = rec
         print(json.dumps(rec), flush=True)
